@@ -293,7 +293,8 @@ object Ops {
     val read = () => {
       // the listener bus usually delivers within well under a millisecond —
       // spin-yield first (sleep granularity would otherwise add ~2 ms per
-      // round to tight iterative loops), then back off; ~2 s total bound
+      // round to tight iterative loops), then back off: peek does not
+      // block, so the bound is 1,000 yields + 2,000 one-ms sleeps, ~2 s
       var tries = 0
       var m = peek(obs)
       while (m.isEmpty && tries < 3000) {
@@ -305,7 +306,7 @@ object Ops {
         // (AQE's empty-relation propagation pruning the CollectMetrics on
         // an empty/terminal round); on a NON-empty frame it means the
         // listener path regressed and every round is paying the ~2 s
-        // spin-wait above. Also evict the never-completing observation
+        // wait above. Also evict the never-completing observation
         // from the session's pending registry (one entry would otherwise
         // leak per pruned round).
         val evicted = discard(df.sparkSession, obs)

@@ -1,12 +1,12 @@
 package graft.ingest
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sink.Sinks
 
 /** End-to-end batch ETL driver mirroring the reference's full lifecycle
-  * (SURVEY §3): raw events → typed entity tables (bronze→silver, idempotent
-  * append) → snapshot/state tables (gold) → serving materializations.
+  * (SURVEY §3): raw events → typed entity tables (bronze, idempotent
+  * append) → enriched silver → snapshot/state tables (gold).
   *
   * Usage: graft.ingest.IngestJob <sfDir> <warehouseDir>
   *
@@ -15,12 +15,38 @@ import graft.sink.Sinks
   *   <wh>/enriched_purchases/      silver with as-of price + in_stable
   *   <wh>/daily_user_state/        per-user snapshots (LS_State analog)
   *   <wh>/gold_pl_state/           platform rollup (PL_State analog)
+  *   <wh>/run_log/                 one marker per stage per run ([[RunLog]])
+  *
+  * Source contract: each run's source is the FULL event history so far
+  * (what the registry queries over the same files assume). Re-delivering it
+  * is routine, the reference's at-least-once load (ls_opening.rs:100):
+  *
+  *  - Bronze appends only keys it does not hold yet, in one fused pass over
+  *    all five families ([[Sinks.appendDedupParquet]]'s split form), and
+  *    the `entities` marker logs the rows this run landed.
+  *  - Silver and gold are overwritten from this run's source, and only when
+  *    stale: the table is missing, or it has no marker finished after the
+  *    last `entities` marker that logged rows (this run's included). Under
+  *    the full-history contract a run that lands nothing has nothing to add
+  *    to a fresh table, so a re-delivered source costs its key check and the
+  *    marker writes. A skipped stage still logs its marker, with `rows = 0`.
+  *    Logs written before markers counted landed rows hold table totals
+  *    (always > 0); the job then refreshed every stage after each of them,
+  *    so the rule reads them correctly.
+  *
+  * A driver that dies after the bronze append commits but before the
+  * `entities` marker is written leaves no record of what it landed: the
+  * next run lands 0 rows and keeps the derived tables. Delete one of them
+  * (it is rebuilt) or run with new events to refresh them.
   *
   * Facts are partitioned by event date — the time-partitioning every 100 TB
-  * deployment needs for pruning; re-running the job is a no-op on the entity
-  * tables (natural-key dedup, K1).
+  * deployment needs for pruning.
   */
 object IngestJob {
+
+  /** The event families, one bronze table each. */
+  val Families: Seq[String] = Seq("purchase", "view", "click", "signup", "error")
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, wh) = args.take(2)
     val spark = SparkSession.builder()
@@ -37,58 +63,57 @@ object IngestJob {
   }
 
   def run(spark: SparkSession, sfDir: String, wh: String): Unit = {
-    // parsed feeds 6+ downstream actions — persist so the raw scan + JSON
-    // parse run once, not once per action
+    // parsed feeds every stage — persist so the raw scan + JSON parse run
+    // once, not once per action
     val parsed = EventPipeline.parse(graft.sources.Tables.events(spark, sfDir)).persist()
     try {
       // enforce the §7.4 decimal clamp at the door: amounts must stay far
       // enough under 1e38 that the clamp AND its sum accumulators are exact
       DecimalGuard.assertWithinClamp(parsed, "value")
-      runStages(parsed, spark, sfDir, wh)
+      runStages(parsed, spark, wh)
     } finally parsed.unpersist()
   }
 
-  private def runStages(parsed: org.apache.spark.sql.DataFrame,
-      spark: SparkSession, sfDir: String, wh: String): Unit = {
+  private def runStages(parsed: DataFrame, spark: SparkSession, wh: String): Unit = {
     // every stage persists an action_history-style run marker (RunLog) —
     // stage, start/finish, rows — so a restarted driver can size its first
-    // tick from RunLog.catchUpDelaySeconds instead of cold-starting. The
-    // row counts are read back from the written parquet (footer-metadata
-    // counts, no data scan).
-    def tableRows(path: String): Long = spark.read.parquet(path).count()
+    // tick from RunLog.catchUpDelaySeconds instead of cold-starting; the
+    // markers of earlier runs, read once here, say which stages are stale
+    val marks = RunLog.marks(spark, wh)
+    val landed = landEntities(parsed, spark, wh)
 
-    // bronze→silver: one entity table per event family, idempotent append,
-    // date-partitioned for pruning
-    RunLog.timed(spark, wh, "entities") {
-      Seq("purchase", "view", "click", "signup", "error").map { t =>
-        Sinks.appendDedupParquet(
-          EventPipeline.entity(parsed, t).withColumn("event_date", to_date(col("ts"))),
-          s"$wh/entities/$t", Seq("event_id"), partitionCols = Seq("event_date"))
-        tableRows(s"$wh/entities/$t")
-      }.sum
+    // overwrite a derived table when stale; its marker logs the rows read
+    // back from the rewritten table, or 0 when the stage had nothing to do
+    def refresh(stage: String)(write: String => Unit): Unit = {
+      val path = s"$wh/$stage"
+      RunLog.timed(spark, wh, stage) {
+        if (landed == 0 && Sinks.exists(spark, path) && !marks.staleSince(stage, "entities")) 0L
+        else { write(path); spark.read.parquet(path).count() }
+      }
     }
 
     // silver: enriched purchases (as-of price, in_stable precompute — R4:
     // enrich at write time so every read query skips the as-of join)
     val enriched = EventPipeline.enrichPurchases(parsed)
-    RunLog.timed(spark, wh, "enriched_purchases") {
+    refresh("enriched_purchases") {
       enriched.withColumn("event_date", to_date(col("ts")))
-        .write.mode(SaveMode.Overwrite)
-        .partitionBy("event_date")
-        .parquet(s"$wh/enriched_purchases")
-      tableRows(s"$wh/enriched_purchases")
+        .write.mode(SaveMode.Overwrite).partitionBy("event_date").parquet(_)
     }
-
     // gold: state snapshots + platform rollup
-    RunLog.timed(spark, wh, "daily_user_state") {
-      EventPipeline.dailyUserState(enriched)
-        .write.mode(SaveMode.Overwrite).parquet(s"$wh/daily_user_state")
-      tableRows(s"$wh/daily_user_state")
+    refresh("daily_user_state") {
+      EventPipeline.dailyUserState(enriched).write.mode(SaveMode.Overwrite).parquet(_)
     }
-    RunLog.timed(spark, wh, "gold_pl_state") {
-      graft.queries.PipelineQueries.queries("q_e2e_pl_state")(spark, sfDir)
-        .write.mode(SaveMode.Overwrite).parquet(s"$wh/gold_pl_state")
-      tableRows(s"$wh/gold_pl_state")
+    refresh("gold_pl_state") {
+      graft.queries.PipelineQueries.plState(parsed).write.mode(SaveMode.Overwrite).parquet(_)
     }
   }
+
+  /** The `entities` stage: land the keys bronze does not hold yet, one
+    * date-partitioned table per family, and log the rows landed.
+    */
+  private[graft] def landEntities(parsed: DataFrame, spark: SparkSession, wh: String): Long =
+    RunLog.timed(spark, wh, "entities") {
+      Sinks.appendDedupParquet(parsed.withColumn("event_date", to_date(col("ts"))),
+        s"$wh/entities", "event_type", Families, Seq("event_id"), Seq("event_date")).values.sum
+    }
 }

@@ -220,38 +220,25 @@ object Multimodal {
     bits.reduce(_ + _)
   }
 
-  /** [[dHash63]] DIRECTLY over a text column — no intermediate cells
-    * array. Each of the 63 bits references exactly its two
-    * `ascii(substring(rpad(text, 70), k, 1))` cells, so when the
-    * optimizer inlines the hash into a pushed-down predicate the
-    * expression stays ~250 substring nodes — the cells-array form
-    * explodes there, because `element_at(array(70 cells), i)` is NOT
-    * simplified and every one of the 126 references drags the whole
-    * 70-element array construction along (measured: a 325 KB filter
-    * condition and a codegen OOM in the shot-dedup chain). Same value as
-    * [[dHashCells]]+[[dHash63Of]] cell for cell; codegen's common-
-    * subexpression elimination shares the repeated rpad/substring calls.
+  /** [[dHash63]] directly over a text column, in ONE native call
+    * (NativeKernels.dhash63Text, r20) — on non-NULL text the same value
+    * as [[dHashCells]]+[[dHash63Of]] cell for cell, with no intermediate
+    * cells array: that form explodes when the optimizer inlines the hash
+    * into a pushed-down predicate, because `element_at(array(70 cells), i)`
+    * is NOT simplified and every one of the 126 references drags the whole
+    * array construction along (measured: a 325 KB filter condition and a
+    * codegen OOM in the shot-dedup chain). It also replaced a ~140-node
+    * rpad/substring/ascii comparison tree; MultimodalSpec pins parity
+    * against that tree, incl. multi-byte, short and NULL inputs. The
+    * dominant win is sceneCuts, which evaluates the hash twice per frame
+    * pair.
+    *
+    * NULL text hashes to NULL, where both Column forms give 0L: a 0
+    * signature would put every NULL-text row in the same band buckets, a
+    * near-duplicate of every other, while a NULL one joins nothing.
     */
   def dHash63Text(text: Column): Column =
-    // r20: ONE native call (NativeKernels.dhash63Text) instead of the
-    // ~140-node rpad/substring/ascii comparison tree — bit-identical
-    // (MultimodalSpec pins parity against the Column tree, incl.
-    // multi-byte and short inputs); the dominant win is sceneCuts, which
-    // evaluates the hash twice per frame pair. The historical built-in
-    // tree lives on as [[dHash63TextColumns]] for the parity pin.
     org.apache.spark.sql.graft.natives.dhash63Text(text)
-
-  /** The pre-r20 all-built-ins formulation of [[dHash63Text]] — kept ONLY
-    * as the parity anchor for the native kernel (the spec compares the
-    * two bit-for-bit; the oracle replays this ascii/substring tree).
-    */
-  def dHash63TextColumns(text: Column): Column = {
-    val t2 = rpad(text, 70, " ")
-    def cell(k: Int) = ascii(substring(t2, k, 1))
-    (for (r <- 0 until 7; c <- 0 until 9) yield
-      when(cell(r * 10 + c + 1) > cell(r * 10 + c + 2),
-        lit(1L << (r * 9 + c))).otherwise(lit(0L))).reduce(_ + _)
-  }
 
   /** Scene-change detection, SHUFFLE-FREE: per media row, pair each
     * sampled frame with its successor INSIDE the frames array (one cheap

@@ -65,38 +65,7 @@ object PipelineQueries {
     // snapshot joined via lag, and the tax identity tax = state_now +
     // outflows − rewards − state_prev, entities.md:345). One multi-agg pass
     // + one window — no per-interval re-scans.
-    "q_e2e_pl_state" -> { (s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val dec18 = (c: String) => col(c).cast("decimal(18,2)")
-      val daily = Tables.events(s, dir)
-        .groupBy(date_trunc("day", col("ts")).as("day"))
-        .agg(
-          count(when(col("event_type") === "purchase", 1)).as("n_purchases"),
-          sum(when(col("event_type") === "purchase", dec18("value"))).as("purchase_vol"),
-          count(when(col("event_type") === "signup", 1)).as("n_signups"),
-          sum(when(col("event_type") === "signup", dec18("value"))).as("signup_vol"),
-          count(when(col("event_type") === "error", 1)).as("n_errors"),
-          sum(when(col("event_type") === "error", dec18("value"))).as("error_vol"),
-          countDistinct(col("user_id")).as("n_active"),
-          max(when(col("event_type") === "purchase", col("value"))).as("max_purchase"))
-      val w = Window.orderBy(col("day"))
-      val cum = Window.orderBy(col("day")).rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      daily
-        .withColumn("state", sum(coalesce(col("purchase_vol"), lit(0).cast("decimal(18,2)")) -
-          coalesce(col("error_vol"), lit(0).cast("decimal(18,2)"))).over(cum))
-        .withColumn("prev_state", lag(col("state"), 1).over(w))
-        .select(col("day").cast("date").as("day"),
-          col("n_purchases"), col("n_signups"), col("n_errors"), col("n_active"),
-          col("purchase_vol").cast("double").as("purchase_vol"),
-          col("signup_vol").cast("double").as("signup_vol"),
-          col("error_vol").cast("double").as("error_vol"),
-          col("max_purchase"),
-          col("state").cast("double").as("state"),
-          (col("state") + coalesce(col("error_vol"), lit(0).cast("decimal(18,2)"))
-            - coalesce(col("signup_vol"), lit(0).cast("decimal(18,2)"))
-            - coalesce(col("prev_state"), lit(0).cast("decimal(28,2)")))
-            .cast("double").as("tax_identity"))
-    }},
+    "q_e2e_pl_state" -> { (s, dir) => plState(Tables.events(s, dir)) },
     // The earn-APR page (reference lp_pool_state.rs:440-517): a 4-operator
     // composition no other e2e query covers — W5 latest state per pool
     // (DISTINCT ON), A6 weighted-average net interest with a NULLIF guard,
@@ -343,6 +312,44 @@ object PipelineQueries {
           lower(hex(element_at(col("sigs"), 1))).as("sig1_hex"))
     }
   )
+
+  /** The `q_e2e_pl_state` rollup over an events frame (`ts`, `user_id`,
+    * `event_type`, `value`): the registry row passes the raw events table,
+    * `IngestJob` its already-parsed, persisted events, so the gold stage
+    * does not scan the source a second time.
+    */
+  def plState(events: DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val dec18 = (c: String) => col(c).cast("decimal(18,2)")
+    val daily = events
+      .groupBy(date_trunc("day", col("ts")).as("day"))
+      .agg(
+        count(when(col("event_type") === "purchase", 1)).as("n_purchases"),
+        sum(when(col("event_type") === "purchase", dec18("value"))).as("purchase_vol"),
+        count(when(col("event_type") === "signup", 1)).as("n_signups"),
+        sum(when(col("event_type") === "signup", dec18("value"))).as("signup_vol"),
+        count(when(col("event_type") === "error", 1)).as("n_errors"),
+        sum(when(col("event_type") === "error", dec18("value"))).as("error_vol"),
+        countDistinct(col("user_id")).as("n_active"),
+        max(when(col("event_type") === "purchase", col("value"))).as("max_purchase"))
+    val w = Window.orderBy(col("day"))
+    val cum = Window.orderBy(col("day")).rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    daily
+      .withColumn("state", sum(coalesce(col("purchase_vol"), lit(0).cast("decimal(18,2)")) -
+        coalesce(col("error_vol"), lit(0).cast("decimal(18,2)"))).over(cum))
+      .withColumn("prev_state", lag(col("state"), 1).over(w))
+      .select(col("day").cast("date").as("day"),
+        col("n_purchases"), col("n_signups"), col("n_errors"), col("n_active"),
+        col("purchase_vol").cast("double").as("purchase_vol"),
+        col("signup_vol").cast("double").as("signup_vol"),
+        col("error_vol").cast("double").as("error_vol"),
+        col("max_purchase"),
+        col("state").cast("double").as("state"),
+        (col("state") + coalesce(col("error_vol"), lit(0).cast("decimal(18,2)"))
+          - coalesce(col("signup_vol"), lit(0).cast("decimal(18,2)"))
+          - coalesce(col("prev_state"), lit(0).cast("decimal(28,2)")))
+          .cast("double").as("tax_identity"))
+  }
 
   val oracleSql: Map[String, String] = Map(
     "q_e2e_daily_state" ->

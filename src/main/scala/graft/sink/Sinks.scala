@@ -14,17 +14,60 @@ object Sinks {
     * batch on the natural key, anti-join against what the sink already
     * holds, append the remainder. Exactly the reference's at-least-once +
     * keyed-dedup = effectively-once contract (ls_opening.rs:100), shaped for
-    * `foreachBatch` reuse. Re-delivering the same batch is a no-op.
+    * `foreachBatch` reuse. Re-delivering the same batch appends no rows.
     */
   def appendDedupParquet(batch: DataFrame, path: String, keys: Seq[String],
       partitionCols: Seq[String] = Seq.empty): Unit = {
     val spark = batch.sparkSession
+    val held =
+      if (exists(spark, path)) Seq(spark.read.parquet(path).select(keys.map(col): _*))
+      else Nil
+    appendParquet(unseen(batch, keys, held), path, partitionCols)
+  }
+
+  /** The split-column form of [[appendDedupParquet]]: the string column
+    * `splitCol` routes each row to the table `<root>/<value>`, for the values
+    * in `tables` (rows with any other value are dropped; the column itself
+    * is not written). One dedup on `(splitCol, keys)` and ONE anti-join
+    * against the union of every existing table's keys replace a pass per
+    * table. The new rows are materialized once, counted per table in one
+    * aggregate, and appended only to the tables that gained rows, so a
+    * re-delivered batch costs its key check and writes nothing.
+    *
+    * Returns the rows this call landed per table (0 where none landed) —
+    * counted before the write, so a caller logs what it appended, not a
+    * table total.
+    */
+  def appendDedupParquet(batch: DataFrame, root: String, splitCol: String,
+      tables: Seq[String], keys: Seq[String],
+      partitionCols: Seq[String]): Map[String, Long] = {
+    val spark = batch.sparkSession
+    val held = tables.filter(t => exists(spark, s"$root/$t")).map(t =>
+      spark.read.parquet(s"$root/$t").select(lit(t).as(splitCol) +: keys.map(col): _*))
+    val fresh = unseen(batch.filter(col(splitCol).isin(tables: _*)), splitCol +: keys, held)
+      .persist()
+    try {
+      val landed = fresh.groupBy(col(splitCol)).count().collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      // rebalance each table's rows on its partition columns: the shared
+      // materialization's partitions hold every table's rows, and writing
+      // them as they lie would give each table a file per partition per
+      // table partition
+      for ((t, _) <- landed)
+        appendParquet(fresh.filter(col(splitCol) === t).drop(splitCol)
+          .hint("rebalance", partitionCols.map(col): _*), s"$root/$t", partitionCols)
+      tables.map(t => t -> landed.getOrElse(t, 0L)).toMap
+    } finally fresh.unpersist()
+  }
+
+  /** `batch` deduplicated on `keys`, minus every key already in `held`. */
+  private def unseen(batch: DataFrame, keys: Seq[String], held: Seq[DataFrame]): DataFrame = {
     val fresh = batch.dropDuplicates(keys)
-    val toWrite =
-      if (exists(spark, path))
-        fresh.join(spark.read.parquet(path).select(keys.map(col): _*), keys, "left_anti")
-      else fresh
-    val writer = toWrite.write.mode(SaveMode.Append)
+    if (held.isEmpty) fresh else fresh.join(held.reduce(_ union _), keys, "left_anti")
+  }
+
+  private def appendParquet(df: DataFrame, path: String, partitionCols: Seq[String]): Unit = {
+    val writer = df.write.mode(SaveMode.Append)
     (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*) else writer)
       .parquet(path)
   }
@@ -216,7 +259,7 @@ object Sinks {
     } finally conn.close()
   }
 
-  private def exists(spark: SparkSession, path: String): Boolean = {
+  private[graft] def exists(spark: SparkSession, path: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(path)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }

@@ -771,13 +771,23 @@ case class ProtoEncodeBytes(child: Expression, fieldNo: Int)
     copy(child = newChild)
 }
 
-/** Non-blocking read of an [[org.apache.spark.sql.Observation]]'s metrics —
-  * `getOrEmpty` is private[spark] (the blocking `get` would deadlock when
-  * AQE's empty-relation propagation prunes the CollectMetrics node), so the
-  * poll is bridged from this package like the other private[sql] surfaces.
+/** Bridges to [[org.apache.spark.sql.Observation]] internals, kept in this
+  * package like the other private[sql] surfaces.
   */
 object ObservationBridge {
-  def peek(o: org.apache.spark.sql.Observation): Map[String, Any] = o.getOrEmpty
+  /** Non-blocking read of an Observation's metrics: `Map.empty` until the
+    * listener has delivered them. Reads the public `future` directly — the
+    * blocking `get` would deadlock when AQE's empty-relation propagation
+    * prunes the CollectMetrics node, and `getOrEmpty` waits up to 100 ms
+    * per call, then throws a NullPointerException on an undelivered
+    * observation (its empty fallback row has no schema).
+    */
+  def peek(o: org.apache.spark.sql.Observation): Map[String, Any] =
+    o.future.value match {
+      case Some(scala.util.Success(row)) if row != null && row.schema != null =>
+        row.getValuesMap[Any](row.schema.fieldNames.toSeq)
+      case _ => Map.empty
+    }
 
   /** Best-effort removal of a never-completed Observation from the
     * session's ObservationManager registry (r20): when AQE's
@@ -899,8 +909,10 @@ case class SqDistDD(left: Expression, right: Expression)
   * `ascii(substring(rpad(text, 70, ' '), k, 1))` cell grid of the
   * Column-tree form (Spark's ascii returns the CODE POINT — probe-pinned)
   * — but one call instead of ~140 codegen'd rpad/substring/ascii nodes per
-  * row. MultimodalSpec pins bit-parity against the Column tree, including
-  * multi-byte and short inputs.
+  * row. NULL text gives NULL (the Column tree gives 0L; the contract is on
+  * [[graft.operators.Multimodal.dHash63Text]]). MultimodalSpec pins
+  * bit-parity against the Column tree, including multi-byte, short and
+  * NULL inputs.
   */
 case class DHash63Text(child: Expression)
     extends UnaryExpression with ExpectsInputTypes {

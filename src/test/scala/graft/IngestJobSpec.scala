@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import graft.ingest.IngestJob
 import graft.sources.Tables
@@ -77,7 +78,7 @@ class IngestJobSpec extends SparkSpec {
       intervalSeconds = 3600, nowEpochMs = last + 7200 * 1000) == 0L)
 
     // idempotent re-run: entity tables unchanged (K1 replay contract);
-    // silver/gold are overwrite-refreshed, still exact; run log APPENDS one
+    // silver/gold are fresh and kept, still exact; run log APPENDS one
     // marker per stage (history, not upsert)
     IngestJob.run(spark, sfDir, wh)
     assert(spark.read.parquet(s"$wh/entities/purchase").count() == nPurchases)
@@ -85,6 +86,100 @@ class IngestJobSpec extends SparkSpec {
     assert(spark.read.parquet(s"$wh/run_log").count() == 2L * stages.size)
     assert(graft.ingest.RunLog.lastFinishedMs(spark, wh, "gold_pl_state").get >= last,
       "re-run must advance (or hold) the last-finished marker")
+  }
+
+  /** Every file under `dir`, relative path → (size, mtime ms). */
+  private def listing(dir: String): Map[String, (Long, Long)] = {
+    val root = java.nio.file.Paths.get(dir)
+    val walk = Files.walk(root)
+    try walk.iterator().asScala.filter(Files.isRegularFile(_))
+      .map(p => root.relativize(p).toString ->
+        ((Files.size(p), Files.getLastModifiedTime(p).toMillis))).toMap
+    finally walk.close()
+  }
+
+  private val derived = Seq("enriched_purchases", "daily_user_state", "gold_pl_state")
+
+  /** `rows` of each stage's latest marker. */
+  private def lastRows(wh: String): Map[String, Long] =
+    spark.read.parquet(s"$wh/run_log").collect()
+      .groupBy(_.getAs[String]("stage"))
+      .map { case (st, rs) => st -> rs.maxBy(_.getAs[Long]("finished_ms")).getAs[Long]("rows") }
+
+  /** Silver and gold in `wh` hold exactly what the registry computes over `dir`. */
+  private def assertMatchesRegistry(wh: String, dir: String): Unit = {
+    def same(table: String, q: String): Unit = {
+      val got = spark.read.parquet(s"$wh/$table")
+      val want = graft.queries.PipelineQueries.queries(q)(spark, dir).select(got.columns.map(col): _*)
+      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
+        s"$table must equal the registry's $q")
+    }
+    same("daily_user_state", "q_e2e_daily_state")
+    same("gold_pl_state", "q_e2e_pl_state")
+    val purchases = Tables.events(spark, dir).filter(col("event_type") === "purchase")
+    val enriched = spark.read.parquet(s"$wh/enriched_purchases")
+    assert(enriched.select("event_id").exceptAll(purchases.select("event_id")).isEmpty &&
+      enriched.count() == purchases.count(), "enriched_purchases holds each purchase once")
+  }
+
+  /** The first half of the source's events by time, as a source directory. */
+  private def earlierHalf(): String = {
+    val n = Tables.events(spark, sfDir).count() // sets the ns-timestamp read mode
+    val dir = Files.createTempDirectory("graft_half").toString
+    spark.read.parquet(s"$sfDir/events.parquet").orderBy("ts", "event_id").limit((n / 2).toInt)
+      .write.parquet(s"$dir/events.parquet")
+    dir
+  }
+
+  test("no-op replay keeps silver and gold files as they are and logs 0 landed rows") {
+    val wh = Files.createTempDirectory("graft_wh").toString
+    IngestJob.run(spark, sfDir, wh)
+    val before = derived.map(t => t -> listing(s"$wh/$t")).toMap
+    val bronze = listing(s"$wh/entities")
+    IngestJob.run(spark, sfDir, wh)
+    derived.foreach(t => assert(listing(s"$wh/$t") == before(t), s"$t was rewritten"))
+    assert(listing(s"$wh/entities") == bronze, "bronze changed on replay")
+    assert(lastRows(wh) == (derived :+ "entities").map(_ -> 0L).toMap,
+      "a replay lands no entity rows and skips every fresh stage")
+  }
+
+  test("a missing table, or stages stale after an interrupted run, are rebuilt exactly") {
+    val wh = Files.createTempDirectory("graft_wh").toString
+    IngestJob.run(spark, sfDir, wh)
+    val kept = Seq("enriched_purchases", "daily_user_state").map(t => t -> listing(s"$wh/$t")).toMap
+    val gold = Files.walk(java.nio.file.Paths.get(s"$wh/gold_pl_state"))
+    try gold.iterator().asScala.toSeq.reverse.foreach(Files.delete) finally gold.close()
+    IngestJob.run(spark, sfDir, wh)
+    kept.foreach { case (t, l) => assert(listing(s"$wh/$t") == l, s"fresh $t was rewritten") }
+    assert(lastRows(wh)("gold_pl_state") > 0, "the deleted gold table is rebuilt")
+    assertMatchesRegistry(wh, sfDir)
+
+    // a run over the full source that stopped after its entities stage:
+    // bronze is current, silver and gold still hold the earlier half
+    val half = earlierHalf()
+    val wh2 = Files.createTempDirectory("graft_wh").toString
+    IngestJob.run(spark, half, wh2)
+    val parsed = graft.ingest.EventPipeline.parse(Tables.events(spark, sfDir))
+    assert(IngestJob.landEntities(parsed, spark, wh2) > 0)
+    IngestJob.run(spark, sfDir, wh2)
+    assert(lastRows(wh2)("entities") == 0L, "bronze already held every key")
+    derived.foreach(t => assert(lastRows(wh2)(t) > 0, s"stale $t must be rebuilt"))
+    assertMatchesRegistry(wh2, sfDir)
+  }
+
+  test("a grown source lands only its new events; silver and gold follow the full source") {
+    val half = earlierHalf()
+    val wh = Files.createTempDirectory("graft_wh").toString
+    IngestJob.run(spark, half, wh)
+    val firstRows = lastRows(wh)("entities")
+    assert(firstRows == Tables.events(spark, half).count())
+    IngestJob.run(spark, sfDir, wh)
+    val total = Tables.events(spark, sfDir).count()
+    assert(lastRows(wh)("entities") == total - firstRows, "only the difference lands")
+    for (t <- IngestJob.Families)
+      assert(spark.read.parquet(s"$wh/entities/$t").count() ==
+        Tables.events(spark, sfDir).filter(col("event_type") === t).count(), s"entity $t count")
+    assertMatchesRegistry(wh, sfDir)
   }
 
   test("decimal clamp guard: testdata passes, >1e30 amounts and cast overflows fail") {

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.operators.Multimodal
 
@@ -91,35 +92,48 @@ class MultimodalSpec extends SparkSpec {
     assert(h.values.forall(_ >= 0L), "63-bit hash stays in the signed-positive range")
   }
 
+  /** The all-built-ins formulation the native [[Multimodal.dHash63Text]]
+    * replaced, kept only as its parity reference, with the kernel's NULL
+    * contract (NULL text → NULL; the bare tree gives 0L).
+    */
+  private def dHash63TextColumns(text: Column): Column = {
+    val t2 = rpad(text, 70, " ")
+    def cell(k: Int) = ascii(substring(t2, k, 1))
+    when(text.isNotNull, (for (r <- 0 until 7; c <- 0 until 9) yield
+      when(cell(r * 10 + c + 1) > cell(r * 10 + c + 2),
+        lit(1L << (r * 9 + c))).otherwise(lit(0L))).reduce(_ + _))
+  }
+
   test("native dHash63Text is bit-identical to the ascii/substring Column tree") {
-    import org.apache.spark.sql.functions.col
     // covers: plain ASCII over/under the 70-char window, the empty string
     // (all-pad grid), exact-70, multi-byte code points (Spark's ascii
     // returns the CODE POINT — the kernel must too), a supplementary-plane
-    // char, and a string of identical chars (zero gradient bits)
-    val rows = Seq(
+    // char, a string of identical chars (zero gradient bits) and NULL
+    val rows = (Seq(
       "the quick brown fox jumps over the lazy dog and keeps going today with more trailing content",
       "short",
       "",
       "x" * 70,
       "café crème €100 über alles and some filler text to cross the window boundary ok",
       "emoji 😀 inside the seventy char window with padding after it",
-      "aaaaaaaaaa"
-    ).zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+      "aaaaaaaaaa",
+      null
+    ).zipWithIndex.map { case (t, i) => (i.toLong, t) }).toDF("doc_id", "text")
     val got = rows.select(col("doc_id"),
         Multimodal.dHash63Text(col("text")).as("n"),
-        Multimodal.dHash63TextColumns(col("text")).as("c"))
-      .as[(Long, Long, Long)].collect()
+        dHash63TextColumns(col("text")).as("c"))
+      .as[(Long, Option[Long], Option[Long])].collect()
     got.foreach { case (id, n, c) =>
       assert(n == c, s"doc $id: native $n != column-tree $c")
     }
+    assert(got.count(_._2.isEmpty) == 1, "NULL text, and only NULL text, hashes to NULL")
     // and against the cells-array formulation too (the mm-family path)
     val viaCells = rows
       .withColumn("__cells", Multimodal.dHashCells(col("text")))
       .select(col("doc_id"), Multimodal.dHash63("__cells").as("h"))
       .as[(Long, Long)].collect().toMap
     got.foreach { case (id, n, _) =>
-      assert(n == viaCells(id), s"doc $id: native $n != cells ${viaCells(id)}")
+      n.foreach(h => assert(h == viaCells(id), s"doc $id: native $h != cells ${viaCells(id)}"))
     }
   }
 

@@ -294,4 +294,20 @@ class OpsSpec extends SparkSpec {
     }
     assert(ex.getMessage.contains("unsupported grain"))
   }
+
+  test("ObservationBridge.peek: an undelivered observation reads empty at once") {
+    import org.apache.spark.sql.graft.ObservationBridge.peek
+    val pending = org.apache.spark.sql.Observation()
+    val t0 = System.nanoTime()
+    (1 to 50).foreach(_ => assert(peek(pending).isEmpty))
+    // a blocking read waits up to 100 ms per call: 50 calls would take 5 s
+    assert((System.nanoTime() - t0) / 1e6 < 1000, "peek must not block")
+
+    val fired = org.apache.spark.sql.Observation()
+    spark.range(10).observe(fired, count(lit(1)).as("n")).collect()
+    fired.get // waits for the listener
+    assert(peek(fired) == Map("n" -> 10L))
+    val (cp, read) = Ops.checkpointWithMetric(spark.range(7).toDF(), count(lit(1)).as("n"))
+    assert(cp.count() == 7 && read().contains(7L))
+  }
 }
