@@ -17,35 +17,34 @@ object DecimalGuard {
   /** Spark's decimal precision ceiling. */
   val SparkMaxPrecision = 38
 
-  /** Assert every non-null value of `valueCol` is clamp-safe:
-    * |value| < 10^(38 − headroomDigits). The headroom covers the SUM
-    * accumulator — Spark widens sum(decimal(p,s)) by at most 10 digits and
-    * caps at precision 38, so `headroomDigits = 8` (limit 1e30, the SURVEY
-    * bound) keeps ~1e8-row partial sums exact. A value the (38,0) cast
-    * itself overflows (cast → null on a non-null input) also fails.
+  /** `df` behind an in-plan assertion that every non-null value of
+    * `valueCol` is clamp-safe: |value| < 10^(38 − headroomDigits). The
+    * headroom covers the SUM accumulator — Spark widens sum(decimal(p,s)) by
+    * at most 10 digits and caps at precision 38, so `headroomDigits = 8`
+    * (limit 1e30, the SURVEY bound) keeps ~1e8-row partial sums exact. A
+    * value the (38,0) cast itself overflows (cast → null on a non-null
+    * input) also fails.
     *
-    * One pruned column scan; run it at ingest (where the clamp is applied),
-    * not per query.
-    *
-    * @throws IllegalStateException naming the column and limit on violation
+    * The assertion is a filter that keeps every row and raises on an
+    * offender, so it costs no scan of its own: it holds wherever the frame's
+    * rows are computed — for a persisted frame, in the first query that
+    * materializes it — and fails that query with a message naming the
+    * column and the limit.
     */
-  def assertWithinClamp(df: DataFrame, valueCol: String, headroomDigits: Int = 8): Unit = {
+  def enforce(df: DataFrame, valueCol: String, headroomDigits: Int = 8): DataFrame = {
     require(headroomDigits > 0 && headroomDigits < SparkMaxPrecision,
       s"headroomDigits must be in (0, $SparkMaxPrecision), got $headroomDigits")
     val limit = java.math.BigDecimal.TEN.pow(SparkMaxPrecision - headroomDigits)
     val v = col(valueCol)
     // try_cast: an overflowing value must register as an OFFENDER (null on a
-    // non-null input), not abort the guard scan under ANSI mode
+    // non-null input), not abort with a cast error under ANSI mode
     val clamped = v.try_cast(DecimalType(SparkMaxPrecision, 0))
-    val offenders = df
-      .filter(v.isNotNull && (clamped.isNull ||
-        abs(clamped) >= lit(limit).cast(DecimalType(SparkMaxPrecision, 0))))
-      .limit(1)
-      .count()
-    if (offenders > 0)
-      throw new IllegalStateException(
-        s"decimal clamp violated: |$valueCol| reaches 1e${SparkMaxPrecision - headroomDigits} " +
-          s"— the documented (38,_) clamp (SURVEY §7.4) no longer holds; " +
-          "switch the exact >38-digit path (binary/two-longs) for this column")
+    val offender = v.isNotNull && (clamped.isNull ||
+      abs(clamped) >= lit(limit).cast(DecimalType(SparkMaxPrecision, 0)))
+    df.filter(when(offender, raise_error(lit(
+      s"decimal clamp violated: |$valueCol| reaches 1e${SparkMaxPrecision - headroomDigits} " +
+        "— the documented (38,_) clamp (SURVEY §7.4) no longer holds; " +
+        "switch the exact >38-digit path (binary/two-longs) for this column")))
+      .otherwise(lit(true)))
   }
 }

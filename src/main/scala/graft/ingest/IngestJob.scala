@@ -1,7 +1,15 @@
 package graft.ingest
 
+import scala.concurrent.{Await, Promise}
+import scala.concurrent.duration._
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import graft.sink.Sinks
 
 /** End-to-end batch ETL driver mirroring the reference's full lifecycle
@@ -28,11 +36,17 @@ import graft.sink.Sinks
   *    stale: the table is missing, or it has no marker finished after the
   *    last `entities` marker that logged rows (this run's included). Under
   *    the full-history contract a run that lands nothing has nothing to add
-  *    to a fresh table, so a re-delivered source costs its key check and the
-  *    marker writes. A skipped stage still logs its marker, with `rows = 0`.
+  *    to a fresh table, so a re-delivered source costs two Spark queries:
+  *    the `run_log` read and the key check. A skipped stage still logs its
+  *    marker, with `rows = 0`; markers are written on the driver, without a
+  *    Spark job ([[RunLog]]).
   *    Logs written before markers counted landed rows hold table totals
   *    (always > 0); the job then refreshed every stage after each of them,
   *    so the rule reads them correctly.
+  *  - The SURVEY §7.4 decimal clamp ([[DecimalGuard]]) is asserted inside
+  *    the plan of the persisted parsed events. The key check is the first
+  *    query to materialize them, so a source with an amount past the clamp
+  *    fails the run before any bronze write and before any marker.
   *
   * A driver that dies after the bronze append commits but before the
   * `entities` marker is written leaves no record of what it landed: the
@@ -64,14 +78,11 @@ object IngestJob {
 
   def run(spark: SparkSession, sfDir: String, wh: String): Unit = {
     // parsed feeds every stage — persist so the raw scan + JSON parse run
-    // once, not once per action
-    val parsed = EventPipeline.parse(graft.sources.Tables.events(spark, sfDir)).persist()
-    try {
-      // enforce the §7.4 decimal clamp at the door: amounts must stay far
-      // enough under 1e38 that the clamp AND its sum accumulators are exact
-      DecimalGuard.assertWithinClamp(parsed, "value")
-      runStages(parsed, spark, wh)
-    } finally parsed.unpersist()
+    // once, not once per action; the decimal clamp is asserted in its plan
+    val parsed = DecimalGuard.enforce(
+      EventPipeline.parse(graft.sources.Tables.events(spark, sfDir)), "value").persist()
+    try runStages(parsed, spark, wh)
+    finally parsed.unpersist()
   }
 
   private def runStages(parsed: DataFrame, spark: SparkSession, wh: String): Unit = {
@@ -82,13 +93,13 @@ object IngestJob {
     val marks = RunLog.marks(spark, wh)
     val landed = landEntities(parsed, spark, wh)
 
-    // overwrite a derived table when stale; its marker logs the rows read
-    // back from the rewritten table, or 0 when the stage had nothing to do
+    // overwrite a derived table when stale; its marker logs the rows the
+    // write command wrote, or 0 when the stage had nothing to do
     def refresh(stage: String)(write: String => Unit): Unit = {
       val path = s"$wh/$stage"
       RunLog.timed(spark, wh, stage) {
         if (landed == 0 && Sinks.exists(spark, path) && !marks.staleSince(stage, "entities")) 0L
-        else { write(path); spark.read.parquet(path).count() }
+        else rowsWritten(spark, path)(write(path))
       }
     }
 
@@ -106,6 +117,31 @@ object IngestJob {
     refresh("gold_pl_state") {
       graft.queries.PipelineQueries.plState(parsed).write.mode(SaveMode.Overwrite).parquet(_)
     }
+  }
+
+  /** Run `write`, which writes the parquet table at `path`, and return the
+    * rows its write command reported (`numOutputRows`), read from a
+    * QueryExecutionListener matched to the command by its output path.
+    * Listener calls arrive on Spark's listener bus after the write returns,
+    * so this waits for the call, up to a minute.
+    */
+  private def rowsWritten(spark: SparkSession, path: String)(write: => Unit): Long = {
+    val out = new Path(path)
+    val target = out.getFileSystem(spark.sessionState.newHadoopConf()).makeQualified(out)
+    val rows = Promise[Long]()
+    // a planned write runs under adaptive execution: the command sits inside
+    // the AdaptiveSparkPlanExec root, which the helper's traversal enters
+    val listener = new QueryExecutionListener with AdaptiveSparkPlanHelper {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        collectFirst(qe.executedPlan) {
+          case DataWritingCommandExec(c: InsertIntoHadoopFsRelationCommand, _)
+              if c.outputPath == target => c.metrics("numOutputRows").value
+        }.foreach(rows.trySuccess)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try { write; Await.result(rows.future, 1.minute) }
+    finally spark.listenerManager.unregister(listener)
   }
 
   /** The `entities` stage: land the keys bronze does not hold yet, one

@@ -1,7 +1,12 @@
 package graft.ingest
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.util.HadoopOutputFile
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.datasources.parquet.SparkToParquetSchemaConverter
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Persisted job-run metadata — the reference's `action_history` analog
   * (crates/etl-ingest/src/aggregation_task.rs:76-86 inserts one row per
@@ -16,26 +21,47 @@ import org.apache.spark.sql.functions._
   * [[lastFinishedMs]] feeds [[graft.serve.Scheduling.catchUpDelaySeconds]]
   * so the aggregation loop resumes from the PERSISTED marker after a driver
   * restart, not from a cold start; [[marks]] tells
-  * [[graft.ingest.IngestJob]] which derived tables are stale. The
-  * single-row append is a driver-side bookkeeping write, mirroring the
-  * reference's `INSERT INTO action_history`.
+  * [[graft.ingest.IngestJob]] which derived tables are stale.
+  *
+  * Each marker is one single-row parquet file written on the driver with
+  * parquet-hadoop's writer — the reference's `INSERT INTO action_history`,
+  * with no Spark job behind it. The file is written under a `.`-prefixed
+  * name and published by rename; readers skip `.`- and `_`-prefixed files,
+  * so none ever sees a partial marker. Its columns are the ones a Spark
+  * append of the same row wrote (logs that predate the driver-side writer
+  * hold such files), so every reader reads both kinds alike.
   *
   * Growth note: one small file per stage run, unbounded by design (the
-  * reference's action_history has the same property). At one row per
-  * aggregation tick this is ~10⁴ files/year — when reads matter, compact
-  * occasionally (`spark.read.parquet(dir).repartition(1)` to a new dir, or
-  * prune rows older than the catch-up horizon, which only needs the last
-  * marker per stage).
+  * reference's action_history has the same property), and every run reads
+  * all of them once ([[marks]]). At one row per aggregation tick this is
+  * ~10⁴ files/year — when that read matters, compact occasionally
+  * (`spark.read.parquet(dir).repartition(1)` to a new dir, or prune rows
+  * older than the catch-up horizon, which only needs the last marker per
+  * stage).
   */
 object RunLog {
 
+  /** The log's columns, in the order a Spark append of the row wrote them. */
+  val Schema: StructType = StructType(Seq(StructField("stage", StringType),
+    StructField("started_ms", LongType), StructField("finished_ms", LongType),
+    StructField("rows", LongType)))
+
+  /** [[Schema]] as the parquet types Spark's own writer gives it. */
+  private val FileSchema = new SparkToParquetSchemaConverter().convert(Schema)
+
   def record(spark: SparkSession, wh: String, stage: String,
       startedMs: Long, finishedMs: Long, rows: Long): Unit = {
-    import spark.implicits._
-    Seq((stage, startedMs, finishedMs, rows))
-      .toDF("stage", "started_ms", "finished_ms", "rows")
-      .coalesce(1)
-      .write.mode(SaveMode.Append).parquet(s"$wh/run_log")
+    val conf = spark.sessionState.newHadoopConf()
+    val name = s"part-${java.util.UUID.randomUUID()}.parquet"
+    val tmp = new Path(s"$wh/run_log", "." + name)
+    val writer = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(tmp, conf))
+      .withConf(conf).withType(FileSchema).build()
+    try writer.write(new SimpleGroupFactory(FileSchema).newGroup()
+      .append("stage", stage).append("started_ms", startedMs)
+      .append("finished_ms", finishedMs).append("rows", rows))
+    finally writer.close()
+    if (!tmp.getFileSystem(conf).rename(tmp, new Path(tmp.getParent, name)))
+      throw new java.io.IOException(s"run_log marker $tmp could not be published")
   }
 
   /** Run `body`, persist the (stage, started, finished, rows) marker, and
@@ -54,9 +80,9 @@ object RunLog {
   def lastFinishedMs(spark: SparkSession, wh: String, stage: String): Option[Long] =
     marks(spark, wh).lastFinished.get(stage)
 
-  /** The log as a run needs it, read in one aggregate: per stage, when its
-    * last marker finished and when its last marker with `rows > 0`
-    * finished. Empty when the log is absent.
+  /** The log as a run needs it: per stage, when its last marker finished
+    * and when its last marker with `rows > 0` finished. Empty when the log
+    * is absent.
     */
   final case class Marks(lastFinished: Map[String, Long], lastLanded: Map[String, Long]) {
     /** True when `stage` has no marker finished after the last marker of
@@ -67,16 +93,17 @@ object RunLog {
       lastLanded.get(source).exists(l => lastFinished.get(stage).forall(_ <= l))
   }
 
+  /** One scan of the log with its known [[Schema]] (no footer inference),
+    * folded on the driver.
+    */
   def marks(spark: SparkSession, wh: String): Marks = {
-    val path = new org.apache.hadoop.fs.Path(s"$wh/run_log")
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(path)) return Marks(Map.empty, Map.empty)
-    val rows = spark.read.parquet(path.toString)
-      .groupBy(col("stage"))
-      .agg(max(col("finished_ms")), max(when(col("rows") > 0, col("finished_ms"))))
-      .collect()
-    def at(i: Int) = rows.collect { case r if !r.isNullAt(i) => r.getString(0) -> r.getLong(i) }.toMap
-    Marks(at(1), at(2))
+    val path = new Path(s"$wh/run_log")
+    if (!path.getFileSystem(spark.sessionState.newHadoopConf()).exists(path))
+      return Marks(Map.empty, Map.empty)
+    val rows = spark.read.schema(Schema).parquet(path.toString).collect().toSeq
+      .filterNot(_.anyNull).map(r => (r.getString(0), r.getLong(2), r.getLong(3)))
+    def lastFinished(rs: Seq[(String, Long, Long)]) = rs.groupMapReduce(_._1)(_._2)(math.max)
+    Marks(lastFinished(rows), lastFinished(rows.filter(_._3 > 0)))
   }
 
   /** Seconds until the next run of `stage` is due — the persisted-marker

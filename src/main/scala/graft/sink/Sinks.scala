@@ -3,6 +3,7 @@ package graft.sink
 import java.util.Properties
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Load-side operators (SURVEY §2.2): idempotent append (the reference's
   * `INSERT ... ON CONFLICT DO NOTHING`, K1/K3), bulk JDBC append (K2),
@@ -15,13 +16,11 @@ object Sinks {
     * holds, append the remainder. Exactly the reference's at-least-once +
     * keyed-dedup = effectively-once contract (ls_opening.rs:100), shaped for
     * `foreachBatch` reuse. Re-delivering the same batch appends no rows.
+    * The sink's keys are read with their types in `batch` ([[heldKeys]]).
     */
   def appendDedupParquet(batch: DataFrame, path: String, keys: Seq[String],
       partitionCols: Seq[String] = Seq.empty): Unit = {
-    val spark = batch.sparkSession
-    val held =
-      if (exists(spark, path)) Seq(spark.read.parquet(path).select(keys.map(col): _*))
-      else Nil
+    val held = if (exists(batch.sparkSession, path)) Seq(heldKeys(batch, path, keys)) else Nil
     appendParquet(unseen(batch, keys, held), path, partitionCols)
   }
 
@@ -41,9 +40,8 @@ object Sinks {
   def appendDedupParquet(batch: DataFrame, root: String, splitCol: String,
       tables: Seq[String], keys: Seq[String],
       partitionCols: Seq[String]): Map[String, Long] = {
-    val spark = batch.sparkSession
-    val held = tables.filter(t => exists(spark, s"$root/$t")).map(t =>
-      spark.read.parquet(s"$root/$t").select(lit(t).as(splitCol) +: keys.map(col): _*))
+    val held = tables.filter(t => exists(batch.sparkSession, s"$root/$t")).map(t =>
+      heldKeys(batch, s"$root/$t", keys).select(lit(t).as(splitCol) +: keys.map(col): _*))
     val fresh = unseen(batch.filter(col(splitCol).isin(tables: _*)), splitCol +: keys, held)
       .persist()
     try {
@@ -59,6 +57,14 @@ object Sinks {
       tables.map(t => t -> landed.getOrElse(t, 0L)).toMap
     } finally fresh.unpersist()
   }
+
+  /** The `keys` columns of the table at `path`, read with the types they
+    * have in `batch`: a known schema spares the footer-inference job that a
+    * plain read of the table runs first.
+    */
+  private def heldKeys(batch: DataFrame, path: String, keys: Seq[String]): DataFrame =
+    batch.sparkSession.read.schema(StructType(keys.map(batch.schema(_)))).parquet(path)
+      .select(keys.map(col): _*)
 
   /** `batch` deduplicated on `keys`, minus every key already in `held`. */
   private def unseen(batch: DataFrame, keys: Seq[String], held: Seq[DataFrame]): DataFrame = {

@@ -182,19 +182,78 @@ class IngestJobSpec extends SparkSpec {
     assertMatchesRegistry(wh, sfDir)
   }
 
+  /** Every message along `e`'s cause chain. */
+  private def messages(e: Throwable): String =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString("\n")
+
   test("decimal clamp guard: testdata passes, >1e30 amounts and cast overflows fail") {
     import spark.implicits._
-    import graft.ingest.DecimalGuard.assertWithinClamp
+    def check(df: org.apache.spark.sql.DataFrame): Long =
+      graft.ingest.DecimalGuard.enforce(df, "value").count()
     // the real corpus sits far under the clamp — must pass untouched
-    assertWithinClamp(Tables.events(spark, sfDir), "value")
+    val events = Tables.events(spark, sfDir)
+    assert(check(events) == events.count(), "the guard keeps every row")
     // nulls are data, not violations
-    assertWithinClamp(Seq[Option[Double]](None, Some(1.0)).toDF("value"), "value")
+    assert(check(Seq[Option[Double]](None, Some(1.0)).toDF("value")) == 2)
     // an amount past the documented 1e30 bound must be rejected...
-    intercept[IllegalStateException](assertWithinClamp(Seq(1e31).toDF("value"), "value"))
+    val over = intercept[Exception](check(Seq(1e31).toDF("value")))
+    assert(messages(over).contains("|value| reaches 1e30"), messages(over))
     // ...and so must one the (38,0) cast itself overflows (u128 max ≈ 3.4e38)
-    intercept[IllegalStateException](assertWithinClamp(Seq(1e39).toDF("value"), "value"))
+    intercept[Exception](check(Seq(1e39).toDF("value")))
     // boundary: just under the limit passes
-    assertWithinClamp(Seq(9.99e29).toDF("value"), "value")
+    assert(check(Seq(9.99e29).toDF("value")) == 1)
+  }
+
+  test("an amount past the clamp fails the run before anything lands") {
+    Tables.events(spark, sfDir).count() // sets the ns-timestamp read mode
+    val src = Files.createTempDirectory("graft_over").toString
+    val raw = spark.read.parquet(s"$sfDir/events.parquet")
+    val one = raw.select(min("event_id")).head().get(0)
+    raw.withColumn("value", when(col("event_id") === one, lit(1e31)).otherwise(col("value")))
+      .write.parquet(s"$src/events.parquet")
+    val wh = Files.createTempDirectory("graft_wh").toString
+    val e = intercept[Exception](IngestJob.run(spark, src, wh))
+    assert(messages(e).contains("|value| reaches 1e30"), messages(e))
+    assert(!Files.exists(java.nio.file.Paths.get(wh, "entities")), "no bronze file lands")
+    assert(!Files.exists(java.nio.file.Paths.get(wh, "run_log")), "no marker is logged")
+  }
+
+  test("run_log: driver-written markers read like Spark-written ones; temp files stay unseen") {
+    import spark.implicits._
+    import graft.ingest.RunLog
+    val rows = Seq(("entities", 1L, 5L, 10L), ("entities", 6L, 9L, 0L), ("gold_pl_state", 7L, 8L, 3L))
+    // how markers were written before the driver-side writer: a Spark append
+    def sparkAppend(wh: String, r: (String, Long, Long, Long)): Unit =
+      Seq(r).toDF("stage", "started_ms", "finished_ms", "rows").coalesce(1)
+        .write.mode("append").parquet(s"$wh/run_log")
+    def record(wh: String, r: (String, Long, Long, Long)): Unit =
+      RunLog.record(spark, wh, r._1, r._2, r._3, r._4)
+    val old = Files.createTempDirectory("graft_log").toString
+    rows.foreach(sparkAppend(old, _))
+    val fresh = Files.createTempDirectory("graft_log").toString
+    rows.foreach(record(fresh, _))
+    val mixed = Files.createTempDirectory("graft_log").toString
+    rows.zipWithIndex.foreach { case (r, i) => if (i == 1) record(mixed, r) else sparkAppend(mixed, r) }
+
+    // a plain read infers the old names, types and order from the new files
+    def read(wh: String) = spark.read.parquet(s"$wh/run_log")
+    def columns(wh: String) = read(wh).schema.map(f => f.name -> f.dataType)
+    assert(columns(fresh) == columns(old))
+    assert(columns(fresh) == RunLog.Schema.map(f => f.name -> f.dataType))
+    assert(read(fresh).as[(String, Long, Long, Long)].collect().sorted.toSeq == rows.sorted)
+
+    val want = RunLog.Marks(Map("entities" -> 9L, "gold_pl_state" -> 8L),
+      Map("entities" -> 5L, "gold_pl_state" -> 8L))
+    for (wh <- Seq(old, fresh, mixed)) {
+      assert(RunLog.marks(spark, wh) == want, wh)
+      assert(RunLog.lastFinishedMs(spark, wh, "entities").contains(9L), wh)
+    }
+
+    // a marker whose writer died before the rename: a partial `.`-prefixed file
+    Files.write(java.nio.file.Paths.get(mixed, "run_log", ".part-unpublished.parquet"),
+      "PAR1 truncated".getBytes)
+    assert(read(mixed).count() == rows.size)
+    assert(RunLog.marks(spark, mixed) == want)
   }
 
   test("typed entity tier agrees with the untyped pipeline") {
