@@ -1,6 +1,6 @@
 package graft.ingest
 
-import scala.concurrent.{Await, Promise}
+import scala.concurrent.{Await, Promise, TimeoutException}
 import scala.concurrent.duration._
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
@@ -122,10 +122,13 @@ object IngestJob {
   /** Run `write`, which writes the parquet table at `path`, and return the
     * rows its write command reported (`numOutputRows`), read from a
     * QueryExecutionListener matched to the command by its output path.
-    * Listener calls arrive on Spark's listener bus after the write returns,
-    * so this waits for the call, up to a minute.
+    * Listener calls arrive on Spark's listener bus after the write returns.
+    * If none arrives within `wait` (the bus drops events when its queue is
+    * full), the committed table is counted instead, so a write that
+    * succeeded never fails the run.
     */
-  private def rowsWritten(spark: SparkSession, path: String)(write: => Unit): Long = {
+  private[graft] def rowsWritten(spark: SparkSession, path: String,
+      wait: FiniteDuration = 10.seconds)(write: => Unit): Long = {
     val out = new Path(path)
     val target = out.getFileSystem(spark.sessionState.newHadoopConf()).makeQualified(out)
     val rows = Promise[Long]()
@@ -140,8 +143,16 @@ object IngestJob {
       override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
     }
     spark.listenerManager.register(listener)
-    try { write; Await.result(rows.future, 1.minute) }
-    finally spark.listenerManager.unregister(listener)
+    val reported =
+      try {
+        write
+        try Some(Await.result(rows.future, wait))
+        catch { case _: TimeoutException => None }
+      } finally spark.listenerManager.unregister(listener)
+    reported.getOrElse {
+      System.err.println(s"[IngestJob] no write metrics for $path within $wait; counting the table")
+      spark.read.parquet(path).count()
+    }
   }
 
   /** The `entities` stage: land the keys bronze does not hold yet, one

@@ -199,7 +199,8 @@ class IngestJobSpec extends SparkSpec {
     val over = intercept[Exception](check(Seq(1e31).toDF("value")))
     assert(messages(over).contains("|value| reaches 1e30"), messages(over))
     // ...and so must one the (38,0) cast itself overflows (u128 max ≈ 3.4e38)
-    intercept[Exception](check(Seq(1e39).toDF("value")))
+    val ovf = intercept[Exception](check(Seq(1e39).toDF("value")))
+    assert(messages(ovf).contains("|value| reaches 1e30"), messages(ovf))
     // boundary: just under the limit passes
     assert(check(Seq(9.99e29).toDF("value")) == 1)
   }
@@ -254,6 +255,21 @@ class IngestJobSpec extends SparkSpec {
       "PAR1 truncated".getBytes)
     assert(read(mixed).count() == rows.size)
     assert(RunLog.marks(spark, mixed) == want)
+  }
+
+  test("rowsWritten: the write command's rows, or the table's count when no listener call comes") {
+    import spark.implicits._
+    import scala.concurrent.duration._
+    val wh = Files.createTempDirectory("graft_wh").toString
+    assert(IngestJob.rowsWritten(spark, s"$wh/direct")(
+      Seq(1, 2, 3).toDF("x").write.parquet(s"$wh/direct")) == 3)
+    // written elsewhere and moved into place: no write command names the
+    // path, so the listener never fires and the committed table is counted
+    val moved = IngestJob.rowsWritten(spark, s"$wh/moved", 200.millis) {
+      Seq(1, 2, 3, 4).toDF("x").write.parquet(s"$wh/staged")
+      Files.move(java.nio.file.Paths.get(wh, "staged"), java.nio.file.Paths.get(wh, "moved"))
+    }
+    assert(moved == 4)
   }
 
   test("typed entity tier agrees with the untyped pipeline") {
