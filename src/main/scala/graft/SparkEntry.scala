@@ -17,7 +17,7 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q1_agg")(spark, "/root/testdata/sf0.001")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
     CoreQueries.queries ++ FilterQueries.queries ++ JoinQueries.queries ++
       AggQueries.queries ++ WindowSetQueries.queries ++
       ScalarQueries.queries ++ DerivationQueries.queries ++
@@ -27,7 +27,7 @@ object SparkEntry {
       TimeSeriesQueries.queries ++ EvalQueries.queries ++
       LiteralTwinQueries.queries ++ ProbeQueries.queries
 
-  def oracleSql: Map[String, String] =
+  lazy val oracleSql: Map[String, String] =
     CoreQueries.oracleSql ++ FilterQueries.oracleSql ++ JoinQueries.oracleSql ++
       AggQueries.oracleSql ++ WindowSetQueries.oracleSql ++
       ScalarQueries.oracleSql ++ DerivationQueries.oracleSql ++

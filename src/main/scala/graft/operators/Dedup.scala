@@ -19,9 +19,8 @@ import TextOps.{md5Long64, tokens}
   * SQL engines can reproduce it bit-for-bit for oracle checks. Every stage is
   * built-in expressions (codegen'd); shuffles key on doc id or band bucket —
   * both well-distributed — so the pipeline survives a 100 TB corpus. The one
-  * skew risk — a hot LSH bucket from boilerplate mega-clusters — is guarded:
-  * buckets over `maxBucketSize` emit linear star pairs instead of quadratic
-  * all-pairs (see [[lshCandidatePairs]]).
+  * skew risk — a hot LSH bucket from boilerplate mega-clusters — is guarded
+  * once, for every banded front, by [[BandFront]].
   */
 object Dedup {
 
@@ -141,66 +140,16 @@ object Dedup {
 
   /** LSH banding: md5 each band of `rowsPerBand` signature values, bucket-join
     * on (band index, band hash), emit unordered candidate pairs (a < b).
-    *
-    * Hot-bucket guard: buckets larger than `maxBucketSize` switch from
-    * all-pairs to STAR pairs (bucket-min id → every other member) — linear in
-    * the bucket size instead of quadratic. For the boilerplate mega-clusters
-    * the cap targets (near-identical docs), every member verifies against
-    * the hub, so the cluster stays one connected component for downstream
-    * dedup; in a mixed over-cap bucket a member similar to a sibling but not
-    * to the hub loses that edge — the accepted trade for bounded fan-out
-    * (mirrors the reference's philosophy, handler/ls_state.rs:23-47). The
-    * bucket size/min annotations ride a window over (band, bh) — the same
-    * hash partitioning the self-join needs — and the annotated band table is
-    * localCheckpointed because three consumers (both join sides + star
-    * extraction) would otherwise re-run the signature pipeline each. The
-    * count of capped buckets is published via `observe` as
-    * `lsh_hot_buckets` for pipeline monitoring.
-    *
-    * `failOnOverCap = true` replaces star substitution with a runtime
-    * `raise_error` on the first over-cap bucket row: for a consumer whose
-    * downstream contract assumes all-pairs semantics (e.g. an oracle that
-    * replays the pipeline uncapped, or a transitive-closure clustering where
-    * one weak hub edge can split a whole component), the cap silently
-    * triggering is a correctness event, not a degradation — this makes it
-    * loud instead.
+    * Hot-bucket guard: [[BandFront]], published as `lsh_hot_buckets`;
+    * `failOnOverCap = true` selects its [[BandFront.Fail]] policy.
     */
   def lshCandidatePairs(sig: DataFrame, idCol: String,
       numHashes: Int, rowsPerBand: Int,
       maxBucketSize: Int = DefaultMaxBucketSize,
-      failOnOverCap: Boolean = false): DataFrame = {
-    val wB = Window.partitionBy(col("band"), col("bh"))
-    val bands = bandTable(sig, idCol, numHashes, rowsPerBand)
-      .withColumn("__sz", count(lit(1)).over(wB))
-      .withColumn("__mn", min(col(idCol)).over(wB))
-      // one row per bucket carries id == min, so this counts capped buckets
-      // exactly once (observe disallows DISTINCT aggregates)
-      .observe("lsh_hot_buckets",
-        sum(when(col("__sz") > maxBucketSize && col(idCol) === col("__mn"), 1)
-          .otherwise(0)).as("n_capped_buckets"))
-      .localCheckpoint()
-    val small = bands.filter(col("__sz") <= maxBucketSize)
-    val l = small.select(col(idCol).as("a"), col("band"), col("bh"))
-    val r = small.select(col(idCol).as("b"), col("band"), col("bh"))
-    val allPairs = l.join(r, Seq("band", "bh")).filter(col("a") < col("b"))
-      .select(col("a"), col("b"))
-    val overCap = bands.filter(col("__sz") > maxBucketSize)
-    val starPairs =
-      if (failOnOverCap)
-        // the when-condition forces raise_error to evaluate per over-cap row
-        // (a bare unused error column would be pruned); zero over-cap rows →
-        // nothing evaluates, nothing throws
-        overCap.select(
-          when(raise_error(concat(
-            lit(s"lshCandidatePairs: bucket exceeded maxBucketSize=$maxBucketSize (size="),
-            col("__sz").cast("string"), lit(") with failOnOverCap set"))).isNull,
-            col(idCol)).as("a"),
-          col(idCol).as("b"))
-      else
-        overCap.filter(col(idCol) =!= col("__mn"))
-          .select(col("__mn").as("a"), col(idCol).as("b"))
-    allPairs.unionByName(starPairs).distinct()
-  }
+      failOnOverCap: Boolean = false): DataFrame =
+    BandFront.selfPairs(bandTable(sig, idCol, numHashes, rowsPerBand), idCol,
+      Seq("band", "bh"), "lsh_hot_buckets", maxBucketSize,
+      BandFront.policy(failOnOverCap))
 
   /** MinHash banded candidate pairs straight from text — the
     * [[lshCandidatePairs]] front with the signature step inlined, exposed
@@ -393,12 +342,10 @@ object Dedup {
     *
     * Scale shape: a daily batch is small next to the standing corpus, so
     * the banded join's cost is bounded by the NEW side's bucket membership,
-    * not the corpus. Hot-bucket guard on the OLD side (the corpus-sized
-    * cohort): an over-cap bucket collapses to its min-id hub — an incoming
+    * not the corpus. The OLD side (the corpus-sized cohort) carries the
+    * [[BandFront.crossPairs]] guard, `cross_lsh_hot_buckets`: an incoming
     * doc colliding with a near-identical mega-cluster still verifies
-    * against the cluster's hub — with the capped count on `observe` as
-    * `cross_lsh_hot_buckets` (inert below the cap, so the uncapped oracle
-    * replay stays exact at test SFs).
+    * against the cluster's hub.
     */
   def crossNearDupMinHash(newDocs: DataFrame, oldDocs: DataFrame,
       idCol: String, textCol: String,
@@ -412,8 +359,7 @@ object Dedup {
   }
 
   /** The NEW→OLD banded candidate join of [[crossNearDupMinHash]] —
-    * (a = incoming id, b = standing id) pairs with the old-side hot-bucket
-    * hub guard and the `cross_lsh_hot_buckets` observe — extracted so the
+    * (a = incoming id, b = standing id) pairs — extracted so the
     * cross-modal incremental tier composes it with the image band join
     * before ONE shared verify.
     */
@@ -421,60 +367,32 @@ object Dedup {
       idCol: String, textCol: String, numHashes: Int, rowsPerBand: Int,
       shingleN: Int, maxBucketSize: Int): DataFrame =
     crossBandPairsOnBands(
-      bandTable(
-        minHashSignature(newDocs, idCol, textCol, numHashes, shingleN),
-        idCol, numHashes, rowsPerBand),
-      bandTable(
-        minHashSignature(oldDocs, idCol, textCol, numHashes, shingleN),
-        idCol, numHashes, rowsPerBand),
+      textBands(newDocs, idCol, textCol, numHashes, rowsPerBand, shingleN),
+      textBands(oldDocs, idCol, textCol, numHashes, rowsPerBand, shingleN),
       idCol, maxBucketSize)
 
   /** The NEW→OLD band join over PRE-BUILT band tables ((idCol, band, bh)
     * rows — [[textBands]] output or a persisted standing index read back
     * from parquet, [[graft.serve.DedupIndex]]): identical semantics to the
-    * recompute path because [[crossBandPairs]] delegates here — the
-    * old-side hot-bucket hub guard and the `cross_lsh_hot_buckets` observe
-    * apply to the standing bands wherever they came from.
+    * recompute path because [[crossBandPairs]] delegates here. The
+    * standing-side guard ([[BandFront.crossPairs]], `cross_lsh_hot_buckets`)
+    * applies to the standing bands wherever they came from.
     */
   def crossBandPairsOnBands(newBands: DataFrame, oldBands: DataFrame,
       idCol: String, maxBucketSize: Int = DefaultMaxBucketSize,
-      failOnOverCap: Boolean = false): DataFrame = {
-    val wB = Window.partitionBy(col("band"), col("bh"))
-    val annotated = oldBands
-      .withColumn("__sz", count(lit(1)).over(wB))
-      .withColumn("__mn", min(col(idCol)).over(wB))
-      .observe("cross_lsh_hot_buckets",
-        sum(when(col("__sz") > maxBucketSize && col(idCol) === col("__mn"), 1)
-          .otherwise(0)).as("n_capped_buckets"))
-    val ob =
-      if (failOnOverCap)
-        // single branch (no under/over split — the standing band table is
-        // the big side; two consumers would scan it twice): over-cap rows
-        // hit the raise arm, everything else passes through
-        annotated.select(
-          when(col("__sz") > maxBucketSize,
-            when(raise_error(concat(
-              lit(s"crossBandPairsOnBands: standing bucket exceeded maxBucketSize=$maxBucketSize (size="),
-              col("__sz").cast("string"), lit(") with failOnOverCap set"))).isNull,
-              col(idCol)).otherwise(col(idCol)))
-            .otherwise(col(idCol)).as("b"),
-          col("band"), col("bh"))
-      else
-        annotated.filter(col("__sz") <= maxBucketSize || col(idCol) === col("__mn"))
-          .select(col(idCol).as("b"), col("band"), col("bh"))
-    newBands.select(col(idCol).as("a"), col("band"), col("bh"))
-      .join(ob, Seq("band", "bh"))
-      .select(col("a"), col("b")).distinct()
-  }
+      failOnOverCap: Boolean = false): DataFrame =
+    BandFront.crossPairs(newBands, oldBands, idCol, Seq("band", "bh"),
+      "cross_lsh_hot_buckets", maxBucketSize, BandFront.policy(failOnOverCap))
 
   /** Incremental CROSS-MODAL admission — [[crossModalPairDedup]]'s
     * NEW-vs-STANDING form, completing the incremental matrix (exact →
     * [[antiJoinBloom]]; text near-dup → [[crossNearDupMinHash]]; edit →
     * the grid tier; pairs → this): which incoming (caption, image)
     * records duplicate the standing corpus in BOTH modalities? Candidates
-    * = the text NEW→OLD band join (old-side hub guard inherited) ∩ the
-    * image NEW→OLD pHash band join; ONE verify — exact caption Jaccard ≥
-    * `threshold` AND exact image Hamming ≤ `maxHamming`. Emits (a =
+    * = the text NEW→OLD band join ∩ the image NEW→OLD pHash band join
+    * (both with the old-side hub guard at `maxBucketSize`); ONE verify —
+    * exact caption Jaccard ≥ `threshold` AND exact image Hamming ≤
+    * `maxHamming`. Emits (a =
     * incoming id, b = standing id, jaccard, hamming); admitted = incoming
     * anti-joined on `a`. No new×new or old×old pairing — intra-batch
     * cross-modal dedup is [[crossModalPairDedup]]'s job. Ids must be
@@ -487,7 +405,8 @@ object Dedup {
       maxBucketSize: Int = DefaultMaxBucketSize): DataFrame = {
     val tPairs = crossBandPairs(newRecs, oldRecs, idCol, captionCol,
       numHashes, rowsPerBand, shingleN, maxBucketSize)
-    val iPairs = Multimodal.phashBandPairsAcross(newRecs, oldRecs, idCol, phashCol)
+    val iPairs = Multimodal.phashBandPairsAcross(newRecs, oldRecs, idCol, phashCol,
+      maxBucketSize = maxBucketSize)
     val cand = tPairs.join(iPairs, Seq("a", "b")).localCheckpoint()
     val all = newRecs.unionByName(oldRecs)
     val ph = all.select(col(idCol), col(phashCol))
@@ -579,26 +498,26 @@ object Dedup {
     *   - all-pairs buckets: restricting a bucket's membership to the
     *     survivor set S turns its pair set {a<b ∈ M} into {a<b ∈ M∩S},
     *     i.e. the full pair set filtered to S×S;
-    *   - the hot-bucket cap only ever gets LAXER on a sub-cohort
-    *     (|M∩S| ≤ |M|), and both stages here run the fronts with the same
-    *     `failOnOverCap`, so a full-cohort over-cap bucket raises at the
-    *     gate before the dedup stage could observe any difference.
+    *   - both fronts always run with the [[BandFront.Fail]] policy: a
+    *     full-cohort over-cap bucket raises instead of star-substituting.
+    *     Star pairs would break the identity twice over — a sub-cohort
+    *     bucket may drop under the cap and pair in full, and a gated-out
+    *     hub disconnects its whole bucket (the [[BandFront]] trade).
     * Output is therefore row-identical to
-    * `crossModalPairDedup(records ⋉ aligned, …)` (DedupSpec pins it) at
-    * half the sketching cost: one MinHash signature pipeline and one pHash
-    * band table instead of two of each.
+    * `crossModalPairDedup(records ⋉ aligned, …, failOnOverCap = true)`
+    * (DedupSpec pins it) at half the sketching cost: one MinHash signature
+    * pipeline and one pHash band table instead of two of each.
     */
   def crossModalGatedDedup(records: DataFrame, idCol: String,
       captionCol: String, phashCol: String,
       numHashes: Int = 16, rowsPerBand: Int = 4, shingleN: Int = 3,
       threshold: Double = 0.6, maxHamming: Int = 6, tau: Double = 0.5,
-      maxBucketSize: Int = DefaultMaxBucketSize,
-      failOnOverCap: Boolean = false): DataFrame = {
+      maxBucketSize: Int = DefaultMaxBucketSize): DataFrame = {
     val tp = textCandidatePairs(records, idCol, captionCol,
-      numHashes, rowsPerBand, shingleN, maxBucketSize, failOnOverCap)
+      numHashes, rowsPerBand, shingleN, maxBucketSize, failOnOverCap = true)
       .localCheckpoint()
     val ip = Multimodal.phashBandPairs(records, idCol, phashCol,
-      maxBucketSize = maxBucketSize, failOnOverCap = failOnOverCap)
+      maxBucketSize = maxBucketSize, failOnOverCap = true)
       .localCheckpoint()
     def sym(p: DataFrame): DataFrame =
       p.select(col("a").as(idCol), col("b").as("__nbr"))
@@ -610,8 +529,8 @@ object Dedup {
       .filter(col("is_aligned")).select(col(idCol))
       .localCheckpoint()
     val cand = tp.join(ip, Seq("a", "b"))
-      .join(broadcast(aligned.select(col(idCol).as("a"))), Seq("a"), "left_semi")
-      .join(broadcast(aligned.select(col(idCol).as("b"))), Seq("b"), "left_semi")
+      .join(aligned.select(col(idCol).as("a")), Seq("a"), "left_semi")
+      .join(aligned.select(col(idCol).as("b")), Seq("b"), "left_semi")
       .localCheckpoint()
     crossModalVerify(cand, records, idCol, captionCol, phashCol,
       shingleN, threshold, maxHamming)
@@ -647,14 +566,14 @@ object Dedup {
     * keyspace (2^width per band) is too small to discriminate at corpus
     * scale — band a rotation family or use [[nearDupPairsMinHash]] instead.
     *
-    * Hot-bucket star guard (same as [[lshCandidatePairs]]): over-cap buckets
-    * link members to the bucket-min doc instead of emitting all pairs. Note
-    * the Hamming filter runs AFTER star substitution, so an over-cap member
-    * whose distance to the HUB exceeds `maxHamming` is dropped entirely even
-    * when within range of a sibling — over-cap buckets can lose members, not
-    * just re-home their edges; with `guaranteeRadius` the zero-miss guarantee
-    * is therefore modulo capped buckets (count observable as
-    * `simhash_hot_buckets`, zero on a healthy corpus).
+    * Hot-bucket guard: [[BandFront]] (star policy), published as
+    * `simhash_hot_buckets`; the hub's sketch rides along as the payload, so
+    * star pairs carry their exact Hamming. The Hamming filter runs AFTER
+    * star substitution, so an over-cap member whose distance to the HUB
+    * exceeds `maxHamming` is dropped entirely even when within range of a
+    * sibling — over-cap buckets can lose members, not just re-home their
+    * edges; with `guaranteeRadius` the zero-miss guarantee is therefore
+    * modulo capped buckets.
     */
   def nearDupPairsSimHash(docs: DataFrame, idCol: String, textCol: String,
       maxHamming: Int = 3,
@@ -680,29 +599,12 @@ object Dedup {
         shiftrightunsigned(col("simhash"), start)
           .bitwiseAND(lit(mask)).as("bv"))
     }
-    val sk = simHash(docs, idCol, textCol)
-    val wB = Window.partitionBy(col("band"), col("bv"))
-    val bands = sk.select(col(idCol), col("simhash"), explode(array(slices: _*)).as("b"))
+    val bands = simHash(docs, idCol, textCol)
+      .select(col(idCol), col("simhash"), explode(array(slices: _*)).as("b"))
       .select(col(idCol), col("simhash"), col("b.band").as("band"), col("b.bv").as("bv"))
-      .withColumn("__sz", count(lit(1)).over(wB))
-      // struct min carries the hub's sketch along with its id; checkpoint —
-      // three consumers would re-run the sketch pipeline otherwise
-      .withColumn("__mn", min(struct(col(idCol), col("simhash"))).over(wB))
-      .observe("simhash_hot_buckets",
-        sum(when(col("__sz") > maxBucketSize && col(idCol) === col("__mn").getField(idCol), 1)
-          .otherwise(0)).as("n_capped_buckets"))
-      .localCheckpoint()
-    val small = bands.filter(col("__sz") <= maxBucketSize)
-    val l = small.select(col(idCol).as("a"), col("simhash").as("sha"), col("band"), col("bv"))
-    val r = small.select(col(idCol).as("b"), col("simhash").as("shb"), col("band"), col("bv"))
-    val allPairs = l.join(r, Seq("band", "bv")).filter(col("a") < col("b"))
-      .select(col("a"), col("b"),
-        bit_count(col("sha").bitwiseXOR(col("shb"))).as("hamming"))
-    val starPairs = bands
-      .filter(col("__sz") > maxBucketSize && col(idCol) =!= col("__mn").getField(idCol))
-      .select(col("__mn").getField(idCol).as("a"), col(idCol).as("b"),
-        bit_count(col("__mn").getField("simhash").bitwiseXOR(col("simhash"))).as("hamming"))
-    allPairs.unionByName(starPairs).distinct()
+    BandFront.selfPairs(bands, idCol, Seq("band", "bv"), "simhash_hot_buckets",
+        maxBucketSize, payload = Some("simhash" -> ((x, y) => bit_count(x.bitwiseXOR(y)))))
+      .withColumnRenamed("__p", "hamming")
       .filter(col("hamming") <= maxHamming)
   }
 
@@ -1061,13 +963,13 @@ object Dedup {
     // longer witness a candidate pair) and the cap NOT firing on a
     // saturating vocabulary is a COST event (candidate volume grows with
     // df²) — both must be visible in production, so the df census rides
-    // `observe` (the Similarity.cellCandidatePairs cell_hot_buckets
+    // `observe` (the BandFront hot-bucket
     // pattern): capped-shingle count + the max df actually seen, readable
     // from any QueryExecutionListener without extra jobs.
     // checkpointed: the df table is consumed TWICE (prefix ranking and
     // the candidate probe side) — without the cut the observe'd aggregate
     // subtree executes twice per run and the census double-counts (the
-    // lshCandidatePairs pattern; r14 advice)
+    // BandFront.selfPairs pattern; r14 advice)
     val dfc = toks.groupBy(col("__tok")).agg(count(lit(1)).as("__df"))
       .observe("containment_hot_shingles",
         sum(when(col("__df") > maxTokenDf, 1L).otherwise(0L))

@@ -278,89 +278,34 @@ object Multimodal {
     * matches [[dHash63]]'s 63-bit sketch (top band carries 15 bits).
     * Scale shape: the join shuffles band keys, never hash pairs — cost is
     * bounded by bucket occupancy exactly like MinHash banding, and like
-    * MinHash banding it needs the hot-bucket guard: a degenerate
-    * constant-phash cluster (many short payloads hashing identically —
-    * the saturation class the shot-dedup probe measured at 65k candidates
-    * from 361 shots) otherwise emits m²/2 pairs onto one reducer. Buckets
-    * over `maxBucketSize` switch to STAR pairs (bucket-min id → every
-    * member — linear, keeps the cluster one connected component for the
-    * exact Hamming verify downstream), the capped count is published via
-    * `observe` as `phash_hot_buckets`, and `failOnOverCap = true` raises
-    * instead for consumers whose contract assumes all-pairs semantics
-    * (the uncapped-oracle-replay rows) — all mirroring
-    * [[graft.operators.Dedup.lshCandidatePairs]]. Inert below the cap,
-    * so oracle replays stay exact at test SFs.
+    * MinHash banding it needs the hot-bucket guard ([[BandFront]],
+    * published as `phash_hot_buckets`): a degenerate constant-phash cluster
+    * (many short payloads hashing identically — the saturation class the
+    * shot-dedup probe measured at 65k candidates from 361 shots) otherwise
+    * emits m²/2 pairs onto one reducer.
     */
   def phashBandPairs(d: DataFrame, idCol: String, hashCol: String,
       numBands: Int = 4, bandBits: Int = 16,
       maxBucketSize: Int = graft.operators.Dedup.DefaultMaxBucketSize,
-      failOnOverCap: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val wB = Window.partitionBy(col("band"), col("bv"))
-    val bands = phashBands(d, idCol, hashCol, numBands, bandBits)
-      .withColumn("__sz", count(lit(1)).over(wB))
-      .withColumn("__mn", min(col(idCol)).over(wB))
-      // one row per bucket carries id == min → counts capped buckets once
-      .observe("phash_hot_buckets",
-        sum(when(col("__sz") > maxBucketSize && col(idCol) === col("__mn"), 1)
-          .otherwise(0)).as("n_capped_buckets"))
-      .localCheckpoint()
-    val small = bands.filter(col("__sz") <= maxBucketSize)
-    val allPairs = small.select(col("band"), col("bv"), col(idCol).as("a"))
-      .join(small.select(col("band"), col("bv"), col(idCol).as("b")),
-        Seq("band", "bv"))
-      .filter(col("a") < col("b"))
-      .select(col("a"), col("b"))
-    val overCap = bands.filter(col("__sz") > maxBucketSize)
-    val starPairs =
-      if (failOnOverCap)
-        // when-condition forces raise_error to evaluate per over-cap row
-        // (a bare unused error column would be pruned); zero over-cap
-        // rows → nothing evaluates, nothing throws
-        overCap.select(
-          when(raise_error(concat(
-            lit(s"phashBandPairs: bucket exceeded maxBucketSize=$maxBucketSize (size="),
-            col("__sz").cast("string"), lit(") with failOnOverCap set"))).isNull,
-            col(idCol)).as("a"),
-          col(idCol).as("b"))
-      else
-        overCap.filter(col(idCol) =!= col("__mn"))
-          .select(col("__mn").as("a"), col(idCol).as("b"))
-    allPairs.unionByName(starPairs).distinct()
-  }
+      failOnOverCap: Boolean = false): DataFrame =
+    BandFront.selfPairs(phashBands(d, idCol, hashCol, numBands, bandBits), idCol,
+      Seq("band", "bv"), "phash_hot_buckets", maxBucketSize,
+      BandFront.policy(failOnOverCap))
 
   /** [[phashBandPairs]] across two cohorts: NEW→OLD band collisions only
     * — no new×new or old×old pairing (the incremental-admission shape,
     * mirroring Dedup.crossNearDupMinHash's band join). Emits (a = new id,
-    * b = old id) distinct.
+    * b = old id) distinct. The standing side carries the [[BandFront]]
+    * guard, published as `cross_phash_hot_buckets`.
     */
   def phashBandPairsAcross(newD: DataFrame, oldD: DataFrame, idCol: String,
       hashCol: String, numBands: Int = 4, bandBits: Int = 16,
       maxBucketSize: Int = graft.operators.Dedup.DefaultMaxBucketSize,
-      failOnOverCap: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val ob0 = phashBands(oldD, idCol, hashCol, numBands, bandBits)
-    // the across form has no star fallback (its consumers are admission
-    // conjunctions, where a thinned old side silently drops rejections);
-    // failOnOverCap adds the LOUD guard on the standing side only —
-    // single branch, the crossBandPairsOnBands stance
-    val ob =
-      if (failOnOverCap) {
-        val wB = Window.partitionBy(col("band"), col("bv"))
-        ob0.withColumn("__sz", count(lit(1)).over(wB))
-          .select(col("band"), col("bv"),
-            when(col("__sz") > maxBucketSize,
-              when(raise_error(concat(
-                lit(s"phashBandPairsAcross: standing bucket exceeded maxBucketSize=$maxBucketSize (size="),
-                col("__sz").cast("string"), lit(") with failOnOverCap set"))).isNull,
-                col(idCol)).otherwise(col(idCol)))
-              .otherwise(col(idCol)).as("b"))
-      } else ob0.select(col("band"), col("bv"), col(idCol).as("b"))
-    phashBands(newD, idCol, hashCol, numBands, bandBits)
-      .select(col("band"), col("bv"), col(idCol).as("a"))
-      .join(ob, Seq("band", "bv"))
-      .select(col("a"), col("b")).distinct()
-  }
+      failOnOverCap: Boolean = false): DataFrame =
+    BandFront.crossPairs(phashBands(newD, idCol, hashCol, numBands, bandBits),
+      phashBands(oldD, idCol, hashCol, numBands, bandBits), idCol,
+      Seq("band", "bv"), "cross_phash_hot_buckets", maxBucketSize,
+      BandFront.policy(failOnOverCap))
 
   /** (id, band, bv) straight from a perceptual-hash column — the
     * [[graft.operators.Dedup.textBands]] analog for Hamming space, exposed

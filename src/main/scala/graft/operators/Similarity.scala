@@ -337,17 +337,15 @@ object Similarity {
     * numTables × 2^numPlanes, so numPlanes must grow with the corpus —
     * numPlanes ≈ log2(n / targetBucketSize) — or every bucket goes over
     * `maxBucketSize` and the star guard truncates recall to hub edges. The
-    * guard is a safety valve for genuine near-identical clusters, not a
-    * substitute for sizing; the capped-bucket count is published via
-    * `observe` as `emb_lsh_hot_buckets` so that failure mode is visible.
-    * The pairing self-join is salted (deterministically, ids only) because
-    * the raw (t, bv) keyspace would cap shuffle parallelism.
+    * guard ([[BandFront]], published as `emb_lsh_hot_buckets`) is a safety
+    * valve for genuine near-identical clusters, not a substitute for
+    * sizing. The pairing self-join is salted because the raw (t, bv)
+    * keyspace would cap shuffle parallelism.
     */
   def nearDupPairsCosineLsh(embeddings: DataFrame, idCol: String, embCol: String,
       threshold: Double, numPlanes: Int = 4, numTables: Int = 8, seed: Long = 42L,
-      dim: Int = 64, maxBucketSize: Int = 1024): DataFrame = {
+      dim: Int = 64, maxBucketSize: Int = Dedup.DefaultMaxBucketSize): DataFrame = {
     requireDim(embeddings, embCol, dim, "nearDupPairsCosineLsh")
-    val wB = Window.partitionBy(col("t"), col("bv"))
     // candidate generation carries BARE IDS — pairs are deduped across the
     // numTables bucketings first, and the (wide) embedding arrays are
     // attached once per surviving pair, not once per candidate occurrence
@@ -356,24 +354,8 @@ object Similarity {
       .select(col(idCol).as("id"),
         lshTableBuckets(col(embCol), numPlanes, numTables, dim, seed).as("b"))
       .select(col("id"), col("b.t").as("t"), col("b.bv").as("bv"))
-      .withColumn("__sz", count(lit(1)).over(wB))
-      .withColumn("__mn", min(col("id")).over(wB))
-      .observe("emb_lsh_hot_buckets",
-        sum(when(col("__sz") > maxBucketSize && col("id") === col("__mn"), 1)
-          .otherwise(0)).as("n_capped_buckets"))
-      .localCheckpoint()
-    val saltFactor = 16
-    val small = b.filter(col("__sz") <= maxBucketSize)
-    val l = small.select(col("id").as("a"), col("t"), col("bv"),
-      pmod(hash(col("id")), lit(saltFactor)).as("__s"))
-    val r = small.select(col("id").as("b"), col("t"), col("bv"))
-      .withColumn("__s", explode(sequence(lit(0), lit(saltFactor - 1))))
-    val allPairs = l.join(r.hint("shuffle_hash"), Seq("t", "bv", "__s"))
-      .filter(col("a") < col("b"))
-      .select(col("a"), col("b"))
-    val starPairs = b.filter(col("__sz") > maxBucketSize && col("id") =!= col("__mn"))
-      .select(col("__mn").as("a"), col("id").as("b"))
-    val cand = allPairs.unionByName(starPairs).distinct()
+    val cand = BandFront.selfPairs(b, "id", Seq("t", "bv"), "emb_lsh_hot_buckets",
+      maxBucketSize, salted = true)
     val ea = embeddings.select(col(idCol).as("a"), col(embCol).as("__ea"))
     val eb = embeddings.select(col(idCol).as("b"), col(embCol).as("__eb"))
     cand.join(ea, Seq("a")).join(eb, Seq("b"))
@@ -394,50 +376,17 @@ object Similarity {
       when(emb.getItem(d) > lit(0.0f), lit(1 << p)).otherwise(lit(0))
     }.reduce(_ + _)
 
-  /** Star-guarded within-cell candidate pairing over a single cell column —
-    * the [[nearDupPairsCosineLsh]] hot-bucket machinery for a one-table
-    * bucketing (SemDedup's sign cells, an IVF codebook assignment): buckets
-    * of ≤ `maxBucketSize` members emit all unordered pairs (a < b); buckets
-    * over the cap switch to STAR pairs (bucket-min hub → every member) —
-    * linear fan-out instead of the O((n/cells)²) blowup a fixed cell space
-    * otherwise guarantees as the corpus grows. Each id lives in exactly ONE
-    * cell, so pairs are unique by construction — no `distinct()` shuffle
-    * (the multi-table LSH variant needs one; this path doesn't). The
-    * all-pairs self-join is salted (ids only) because a small fixed cell
-    * keyspace would cap shuffle parallelism. Bucket size/min are computed
-    * as a per-cell AGGREGATE and broadcast back rather than a whole-table
-    * window (the LSH variant's shape): the stats table has one row per
-    * DISTINCT CELL, and the cell space is configuration-bounded by
-    * construction (2^signBits, or the IVF nCells) — never corpus-sized —
-    * so the broadcast always fits and the annotated table is cheap enough
-    * to recompute per consumer (narrow scan + broadcast join; no
-    * checkpoint, plan-build stays job-free for the registry census).
-    * Capped-bucket count rides `observe` on the stats aggregate as
-    * `cell_hot_buckets` — the cap silently firing is a recall event the
-    * pipeline monitor must see.
+  /** Within-cell candidate pairs (a < b) over a single cell column — the
+    * [[nearDupPairsCosineLsh]] front for a one-table bucketing (SemDedup's
+    * sign cells, an IVF codebook assignment). A fixed cell space otherwise
+    * guarantees O((n/cells)²) fan-out as the corpus grows, so cells carry
+    * the [[BandFront]] guard (published as `cell_hot_buckets`), and the
+    * self-join is salted because the cell keyspace is small.
     */
   def cellCandidatePairs(cells: DataFrame, idCol: String, cellCol: String,
-      maxBucketSize: Int = 1024): DataFrame = {
-    val ids = cells.select(col(idCol).as("id"), col(cellCol).as("__cell"))
-    val stats = ids.groupBy(col("__cell"))
-      .agg(count(lit(1)).as("__sz"), min(col("id")).as("__mn"))
-      .observe("cell_hot_buckets",
-        sum(when(col("__sz") > maxBucketSize, 1).otherwise(0))
-          .as("n_capped_buckets"))
-    val b = ids.join(broadcast(stats), Seq("__cell"))
-    val saltFactor = 16
-    val small = b.filter(col("__sz") <= maxBucketSize)
-    val l = small.select(col("id").as("a"), col("__cell"),
-      pmod(hash(col("id")), lit(saltFactor)).as("__s"))
-    val r = small.select(col("id").as("b"), col("__cell"))
-      .withColumn("__s", explode(sequence(lit(0), lit(saltFactor - 1))))
-    val allPairs = l.join(r.hint("shuffle_hash"), Seq("__cell", "__s"))
-      .filter(col("a") < col("b"))
-      .select(col("a"), col("b"))
-    val starPairs = b.filter(col("__sz") > maxBucketSize && col("id") =!= col("__mn"))
-      .select(col("__mn").as("a"), col("id").as("b"))
-    allPairs.unionByName(starPairs)
-  }
+      maxBucketSize: Int = Dedup.DefaultMaxBucketSize): DataFrame =
+    BandFront.selfPairs(cells.select(col(idCol).as("id"), col(cellCol).as("__cell")),
+      "id", Seq("__cell"), "cell_hot_buckets", maxBucketSize, salted = true)
 
   /** Deterministic pseudo-random hyperplanes: component d of plane p is a
     * hash of (seed, p, d) mapped to [-1, 1]. Pure driver-side doubles — the
@@ -612,7 +561,7 @@ object Similarity {
     * (+ singletons), with per-survivor merge counts.
     */
   def semDedup(emb: DataFrame, cells: DataFrame, idCol: String, embCol: String,
-      threshold: Double, maxBucketSize: Int = 1024): DataFrame = {
+      threshold: Double, maxBucketSize: Int = Dedup.DefaultMaxBucketSize): DataFrame = {
     val cand = cellCandidatePairs(cells, idCol, "cell", maxBucketSize)
     val ea = emb.select(col(idCol).as("a"), col(embCol).as("__ea"))
     val eb = emb.select(col(idCol).as("b"), col(embCol).as("__eb"))
@@ -712,7 +661,7 @@ object Similarity {
     def buckets(emb: Column): Column = lshTableBuckets(emb, numPlanes, numTables, dim, seed)
     // per-(table, bucket) corpus occupancy: the window's (t, bv) exchange
     // is the partitioning the join needs anyway, so the census costs one
-    // sort, not an extra shuffle (the crossNearDupMinHash __sz pattern)
+    // sort, not an extra shuffle (the BandFront __sz pattern)
     val wB = Window.partitionBy(col("t"), col("bv"))
     val c = corpus.select(col(idCol).as("neighbor_id"), col(embCol).as("__ce"),
       buckets(col(embCol)).as("b"))

@@ -287,7 +287,7 @@ object ExtTextQueries {
       // oracle unchanged).
       Dedup.crossModalGatedDedup(recs, "doc_id", "text", "ph",
         numHashes = 16, rowsPerBand = 4, shingleN = 3,
-        threshold = 0.6, maxHamming = 6, failOnOverCap = true)
+        threshold = 0.6, maxHamming = 6)
     },
     // The cross-modal pair graph closed transitively — per-RECORD cluster
     // ids over the conjunction pairs (hash-min flooding, the

@@ -1218,6 +1218,21 @@ class DedupSpec extends SparkSpec {
     assert(!shared.exists(p => Set(p._1, p._2).exists(Set(5L, 13L))))
   }
 
+  test("gated dedup raises on an over-cap band bucket instead of star-substituting") {
+    // star pairs would route the cluster through its min-id hub, which the
+    // gate may drop, so the shared-fronts operator always runs both fronts
+    // with the fail policy
+    val cap = "the quick brown fox jumps over the lazy dog while the storm rolls in"
+    val rows = (0L until 40L).map(i => (i, cap, 0x1234432112344321L))
+    val recs = spark.createDataFrame(rows).toDF("doc_id", "text", "ph")
+    val ex = intercept[Exception] {
+      Dedup.crossModalGatedDedup(recs, "doc_id", "text", "ph", maxBucketSize = 8).collect()
+    }
+    val msgs = Iterator.iterate(ex: Throwable)(_.getCause).takeWhile(_ != null)
+      .map(t => Option(t.getMessage).getOrElse("")).mkString(" | ")
+    assert(msgs.contains("maxBucketSize=8"), s"expected over-cap raise, got: $msgs")
+  }
+
   test("star-cap remediation tier: over-cap alignment buckets stay connected through the hub; the loud tier raises") {
     // 40 identical (caption, image) records: every band bucket holds all
     // 40 — far over a forced cap of 8 — plus a singleton. The capped mode
