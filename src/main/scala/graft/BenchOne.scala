@@ -1,32 +1,15 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility: time individual named queries against a chosen sf dir.
   * Usage: graft.BenchOne <sfDir> <queryName>...
   */
 object BenchOne {
   def main(args: Array[String]): Unit = {
     val sfDir = args.head
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .withExtensions(new org.apache.spark.sql.graft.GraftExtensions)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    for (n <- args.tail) {
-      // same hermetic settle as Bench: drop prior queries' checkpoint
-      // blocks (synchronously — the async ContextCleaner lags), then GC
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      System.gc()
-      val t0 = System.nanoTime()
+    val spark = LocalSession()
+    for (n <- args.tail) LocalSession.timed(spark, n) {
       SparkEntry.queries(n)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
-      println(f"${(System.nanoTime() - t0) / 1e9}%8.2f  $n")
     }
     spark.stop()
   }

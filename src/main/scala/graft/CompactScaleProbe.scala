@@ -1,7 +1,11 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.nio.file.Files
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.LocalSession.timed
+import graft.serve.{AnnIndex, DedupIndex}
+import graft.sources.Tables
 
 /** Dev utility (r19, VERDICT item 6): wall-clock `compact` under MANY
   * segments. The r18 three-decade table probed one append → a 2-segment
@@ -24,104 +28,46 @@ object CompactScaleProbe {
     val standingDir = args(0)
     val batchDir = args(1)
     val nAppends = if (args.length > 2) args(2).toInt else 15
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .withExtensions(new org.apache.spark.sql.graft.GraftExtensions)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession()
 
-    def timed[A](label: String)(f: => A): A = {
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      System.gc()
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"${(System.nanoTime() - t0) / 1e9}%8.2f  $label")
-      r
+    // one lifecycle: build, n disjoint-id appends, compact; then the same
+    // total data appended as ONE segment onto a fresh build, compact
+    def probe(name: String, idCol: String, standing: DataFrame, batch: DataFrame)(
+        build: (String, DataFrame) => Unit, append: (String, DataFrame) => Unit,
+        compact: String => Unit): Unit = {
+      val off = standing.agg(max(col(idCol))).head.getLong(0) + 1
+      val span = batch.agg(max(col(idCol))).head.getLong(0) + 1
+      // batch i lives at [off + i·span, …)
+      val batches = (0 until nAppends)
+        .map(i => batch.withColumn(idCol, col(idCol) + (off + i * span)))
+      val many = Files.createTempDirectory(s"graft_probe_cmp_${name}_m").toString
+      timed(spark, s"$name.build (standing)")(build(many, standing))
+      timed(spark, s"$name.append ×$nAppends (disjoint batches)") {
+        batches.foreach(append(many, _))
+      }
+      println(s"          segments before compact: ${graft.serve.Publish.segments(spark, many).size}")
+      timed(spark, s"$name.compact (${nAppends + 1} segments)")(compact(many))
+      val two = Files.createTempDirectory(s"graft_probe_cmp_${name}_2").toString
+      timed(spark, s"$name.build (standing, control)")(build(two, standing))
+      timed(spark, s"$name.append ×1 (same total data, one segment)") {
+        append(two, batches.reduce(_.unionByName(_)))
+      }
+      timed(spark, s"$name.compact (2 segments, same total data)")(compact(two))
     }
 
-    def segCount(root: String): Int =
-      new java.io.File(root).listFiles()
-        .count(f => f.isDirectory && f.getName.startsWith("seg-"))
+    probe("DedupIndex", "doc_id", Tables.documents(spark, standingDir),
+        Tables.documents(spark, batchDir))(
+      DedupIndex.build(spark, _, _, "doc_id", "text"),
+      DedupIndex.append(spark, _, _, "doc_id", "text"),
+      DedupIndex.compact(spark, _, retentionMs = 0L))
 
-    // disjoint id spans per batch: batch i lives at [off + i·span, …)
-    def shifted(df: DataFrame, idCol: String, off: Long, span: Long, i: Int): DataFrame =
-      df.withColumn(idCol, col(idCol) + (off + i * span))
-
-    // ---- DedupIndex ------------------------------------------------------
-    val standingDocs = graft.sources.Tables.documents(spark, standingDir)
-    val batchDocs = graft.sources.Tables.documents(spark, batchDir)
-    val dOff = standingDocs.agg(max(col("doc_id"))).head.getLong(0) + 1
-    val dSpan = batchDocs.agg(max(col("doc_id"))).head.getLong(0) + 1
-
-    val dMany = java.nio.file.Files.createTempDirectory("graft_probe_cmp_dedup_m").toString
-    timed("DedupIndex.build (standing)") {
-      graft.serve.DedupIndex.build(spark, dMany, standingDocs, "doc_id", "text")
-    }
-    timed(s"DedupIndex.append ×$nAppends (disjoint batches)") {
-      (0 until nAppends).foreach(i =>
-        graft.serve.DedupIndex.append(spark, dMany,
-          shifted(batchDocs, "doc_id", dOff, dSpan, i), "doc_id", "text"))
-    }
-    println(s"          segments before compact: ${segCount(dMany)}")
-    timed(s"DedupIndex.compact (${nAppends + 1} segments)") {
-      graft.serve.DedupIndex.compact(spark, dMany, retentionMs = 0L)
-    }
-
-    val dTwo = java.nio.file.Files.createTempDirectory("graft_probe_cmp_dedup_2").toString
-    timed("DedupIndex.build (standing, control)") {
-      graft.serve.DedupIndex.build(spark, dTwo, standingDocs, "doc_id", "text")
-    }
-    val dUnion = (0 until nAppends)
-      .map(i => shifted(batchDocs, "doc_id", dOff, dSpan, i))
-      .reduce(_.unionByName(_))
-    timed("DedupIndex.append ×1 (same total data, one segment)") {
-      graft.serve.DedupIndex.append(spark, dTwo, dUnion, "doc_id", "text")
-    }
-    timed("DedupIndex.compact (2 segments, same total data)") {
-      graft.serve.DedupIndex.compact(spark, dTwo, retentionMs = 0L)
-    }
-
-    // ---- AnnIndex --------------------------------------------------------
-    val standingEmb = spark.read.parquet(s"$standingDir/embeddings.parquet")
-    val batchEmb = spark.read.parquet(s"$batchDir/embeddings.parquet")
-    val aOff = standingEmb.agg(max(col("vec_id"))).head.getLong(0) + 1
-    val aSpan = batchEmb.agg(max(col("vec_id"))).head.getLong(0) + 1
+    val standingEmb = Tables.embeddings(spark, standingDir)
     val nCells = math.ceil(math.sqrt(standingEmb.count().toDouble)).toInt.max(1)
-
-    val aMany = java.nio.file.Files.createTempDirectory("graft_probe_cmp_ann_m").toString
-    timed(s"AnnIndex.build (standing, nCells=$nCells)") {
-      graft.serve.AnnIndex.build(spark, aMany, standingEmb,
-        "vec_id", "embedding", nCells = nCells)
-    }
-    timed(s"AnnIndex.append ×$nAppends (disjoint batches)") {
-      (0 until nAppends).foreach(i =>
-        graft.serve.AnnIndex.append(spark, aMany,
-          shifted(batchEmb, "vec_id", aOff, aSpan, i), "vec_id", "embedding"))
-    }
-    println(s"          segments before compact: ${segCount(aMany)}")
-    timed(s"AnnIndex.compact (${nAppends + 1} segments)") {
-      graft.serve.AnnIndex.compact(spark, aMany, retentionMs = 0L)
-    }
-
-    val aTwo = java.nio.file.Files.createTempDirectory("graft_probe_cmp_ann_2").toString
-    timed("AnnIndex.build (standing, control)") {
-      graft.serve.AnnIndex.build(spark, aTwo, standingEmb,
-        "vec_id", "embedding", nCells = nCells)
-    }
-    val aUnion = (0 until nAppends)
-      .map(i => shifted(batchEmb, "vec_id", aOff, aSpan, i))
-      .reduce(_.unionByName(_))
-    timed("AnnIndex.append ×1 (same total data, one segment)") {
-      graft.serve.AnnIndex.append(spark, aTwo, aUnion, "vec_id", "embedding")
-    }
-    timed("AnnIndex.compact (2 segments, same total data)") {
-      graft.serve.AnnIndex.compact(spark, aTwo, retentionMs = 0L)
-    }
+    println(s"          AnnIndex nCells=$nCells")
+    probe("AnnIndex", "vec_id", standingEmb, Tables.embeddings(spark, batchDir))(
+      AnnIndex.build(spark, _, _, "vec_id", "embedding", nCells = nCells),
+      AnnIndex.append(spark, _, _, "vec_id", "embedding"),
+      AnnIndex.compact(spark, _, retentionMs = 0L))
     spark.stop()
   }
 }

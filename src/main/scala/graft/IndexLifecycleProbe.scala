@@ -1,7 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.LocalSession.timed
 
 /** Dev utility (r18 VERDICT item 3): wall-clock the two persisted index
   * lifecycles at a REAL scale step — build the standing index from a large
@@ -18,25 +18,7 @@ object IndexLifecycleProbe {
   def main(args: Array[String]): Unit = {
     val standingDir = args(0)
     val batchDir = args(1)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .withExtensions(new org.apache.spark.sql.graft.GraftExtensions)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
-    def timed[A](label: String)(f: => A): A = {
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      System.gc()
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"${(System.nanoTime() - t0) / 1e9}%8.2f  $label")
-      r
-    }
+    val spark = LocalSession()
 
     // ---- DedupIndex: build(standing) / admit / append(batch) / compact
     val standingDocs = graft.sources.Tables.documents(spark, standingDir)
@@ -44,18 +26,18 @@ object IndexLifecycleProbe {
     val batchDocs = graft.sources.Tables.documents(spark, batchDir)
       .withColumn("doc_id", col("doc_id") + idOffset)
     val dRoot = java.nio.file.Files.createTempDirectory("graft_probe_dedup_idx").toString
-    timed("DedupIndex.build (standing corpus)") {
+    timed(spark, "DedupIndex.build (standing corpus)") {
       graft.serve.DedupIndex.build(spark, dRoot, standingDocs, "doc_id", "text")
     }
-    val rejections = timed("DedupIndex.admitNearDupsIndexOnly (batch)") {
+    val rejections = timed(spark, "DedupIndex.admitNearDupsIndexOnly (batch)") {
       graft.serve.DedupIndex.admitNearDupsIndexOnly(spark, dRoot, batchDocs,
         "doc_id", "text").count()
     }
     println(s"          rejection pairs: $rejections")
-    timed("DedupIndex.append (batch)") {
+    timed(spark, "DedupIndex.append (batch)") {
       graft.serve.DedupIndex.append(spark, dRoot, batchDocs, "doc_id", "text")
     }
-    timed("DedupIndex.compact") {
+    timed(spark, "DedupIndex.compact") {
       graft.serve.DedupIndex.compact(spark, dRoot, retentionMs = 0L)
     }
 
@@ -67,20 +49,20 @@ object IndexLifecycleProbe {
     val n = standingEmb.count()
     val nCells = math.ceil(math.sqrt(n.toDouble)).toInt.max(1)
     val aRoot = java.nio.file.Files.createTempDirectory("graft_probe_ann_idx").toString
-    timed(s"AnnIndex.build (standing corpus, nCells=$nCells)") {
+    timed(spark, s"AnnIndex.build (standing corpus, nCells=$nCells)") {
       graft.serve.AnnIndex.build(spark, aRoot, standingEmb,
         "vec_id", "embedding", nCells = nCells)
     }
-    val served = timed("AnnIndex.search (fixed 100-query batch, nProbe=8)") {
+    val served = timed(spark, "AnnIndex.search (fixed 100-query batch, nProbe=8)") {
       graft.serve.AnnIndex.search(spark, aRoot, standingEmb,
         standingEmb.filter(col("vec_id") < 100), "vec_id", "vec_id",
         "embedding", k = 5, nProbe = 8).count()
     }
     println(s"          served rows: $served")
-    timed("AnnIndex.append (batch, stored codebook)") {
+    timed(spark, "AnnIndex.append (batch, stored codebook)") {
       graft.serve.AnnIndex.append(spark, aRoot, batchEmb, "vec_id", "embedding")
     }
-    timed("AnnIndex.compact") {
+    timed(spark, "AnnIndex.compact") {
       graft.serve.AnnIndex.compact(spark, aRoot, retentionMs = 0L)
     }
     spark.stop()

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,18 +9,10 @@ object Verify {
     // optional trailing names restrict the dump (dev subset runs); the
     // driver always calls with exactly two args → full dump
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // belt-and-braces with the ntz() output cast below: any timestamp
-      // that does reach the writer as LTZ lands as µs, never INT96/ns
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .withExtensions(new org.apache.spark.sql.graft.GraftExtensions)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
+    // belt-and-braces with the ntz() output cast below: any timestamp
+    // that does reach the writer as LTZ lands as µs, never INT96/ns
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     new java.io.File(outDir).mkdirs()
     // sorted for deterministic run order (Map iteration order is not)
     // Serialization contract with the DuckDB oracle (r6): the oracle's

@@ -67,9 +67,12 @@ object Clustering {
         array(featureCols.map(c => col(c).cast("double")): _*).as("__fs"))
       .localCheckpoint()
     val initOrder = (1 to d).map(i => element_at(col("__fs"), i).asc) :+ col("__id").asc
+    // the k-row seed is checkpointed once: every round's ctr chain ends
+    // in it, and left lazy it re-ran the O(n) orderBy(...).limit(k) each round
     var ctr = pts.orderBy(initOrder: _*).limit(k)
       .withColumn("cid", row_number().over(Window.orderBy(initOrder: _*)) - 1)
       .select(col("cid"), col("__fs").as("__cs"))
+      .localCheckpoint()
     var upd: DataFrame = null
     for (_ <- 1 to iters) {
       // assignment is a NARROW map: the k×d centroid table rides in as ONE
@@ -139,10 +142,10 @@ object Clustering {
               array((1 to d).map(i => sum(element_at(col("__fs"), i))): _*).as("__sum"))
         ).localCheckpoint()
       // ctr stays LAZY (r20): it is k rows joined to the CHECKPOINTED upd,
-      // so the doubly-referenced (assignment + empty-cluster fallback)
-      // lineage re-expands only as 2^iters copies of k-row arithmetic over
-      // materialized leaves — pure planning, no recompute — where the old
-      // per-round localCheckpoint paid a driver action each round
+      // so its lineage grows by one k-row join per round (linearly in
+      // iters) over materialized leaves — the checkpointed seed and each
+      // round's upd — where a per-round localCheckpoint paid a driver
+      // action each round
       ctr = ctr.join(upd, Seq("cid"), "left")
         .select(col("cid"),
           when(col("__n").isNull, col("__cs"))

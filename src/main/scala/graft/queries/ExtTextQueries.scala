@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.{Dedup, Multimodal, TextOps}
+import graft.serve.Publish
 import graft.sources.Tables
 
 /** Extension operators: text analysis + deduplication over the `documents`
@@ -1828,13 +1829,9 @@ object ExtTextQueries {
     * broadcast scalar it is. Sized from the parquet footer count (no count
     * job at plan-build time — the embeddingCount lesson).
     */
-  private val docBlooms =
-    scala.collection.concurrent.TrieMap.empty[(String, Long), Option[Array[Byte]]]
-  private def docBloom(s: SparkSession, dir: String): Option[Array[Byte]] = {
-    val conf = s.sessionState.newHadoopConf()
-    val root = new org.apache.hadoop.fs.Path(s"$dir/documents.parquet")
-    val mtime = root.getFileSystem(conf).getFileStatus(root).getModificationTime
-    docBlooms.getOrElseUpdate((dir, mtime), {
+  private val docBlooms = new Publish.FileMemo[Option[Array[Byte]]]
+  private def docBloom(s: SparkSession, dir: String): Option[Array[Byte]] =
+    docBlooms(s, s"$dir/documents.parquet") { _ =>
       val nDocs = Tables.parquetRecordCount(s, s"$dir/documents.parquet")
       val fpCol = md5(concat_ws(" ", slice(TextOps.tokens(col("text")), 1, 4)))
       val old = Tables.documents(s, dir)
@@ -1842,29 +1839,25 @@ object ExtTextQueries {
         .filter(pmod(col("doc_id"), lit(3)) === 0)
       Dedup.buildKeyBloom(old, "prefix_fp",
         expectedItems = (nDocs / 3 + 1).max(1024L), fpp = 0.01)
-    })
-  }
+    }
 
   /** Persisted standing-corpus dedup index for q_x_incr_index_census:
-    * built ONCE per (dir, documents mtime) into a temp root via
-    * [[graft.serve.DedupIndex.build]] — the registry row then exercises
-    * the read-back path every run (the docBloom memoization pattern;
-    * a bench rep re-reads parquet, it does not re-publish).
+    * built ONCE per (dir, documents mtime) via
+    * [[graft.serve.DedupIndex.build]] into the fixed root
+    * `/tmp/graft_dedup_index/<SF-dir basename>`, published and reused
+    * across JVMs by [[graft.serve.Publish.publishOnce]] — the registry row
+    * then exercises the read-back path every run (a bench rep re-reads
+    * parquet, it does not re-publish).
     */
-  private val dedupIndexRoots =
-    scala.collection.concurrent.TrieMap.empty[(String, Long), String]
-  private def standingIndexRoot(s: SparkSession, dir: String): String = {
-    val conf = s.sessionState.newHadoopConf()
-    val root = new org.apache.hadoop.fs.Path(s"$dir/documents.parquet")
-    val mtime = root.getFileSystem(conf).getFileStatus(root).getModificationTime
-    dedupIndexRoots.getOrElseUpdate((dir, mtime), {
-      val out = java.nio.file.Files.createTempDirectory("graft_dedup_index").toString
-      graft.serve.DedupIndex.build(s, out,
+  private val dedupIndexRoots = new Publish.FileMemo[String]
+  private def standingIndexRoot(s: SparkSession, dir: String): String =
+    Publish.sourcedRoot(dedupIndexRoots, s, "/tmp/graft_dedup_index", dir,
+        s"$dir/documents.parquet",
+        s"DedupIndex.build doc_id%3=0 text ${graft.serve.DedupIndex.Params()}") { root =>
+      graft.serve.DedupIndex.build(s, root,
         Tables.documents(s, dir).filter(pmod(col("doc_id"), lit(3)) === 0),
         "doc_id", "text")
-      out
-    })
-  }
+    }
 
   /** Fixed retrieval query terms shared by the BM25, coverage, and RRF
     * fusion entries.

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.{Clustering, Dedup, Similarity}
+import graft.serve.Publish
 import graft.sources.Tables
 
 /** Extension operators: similarity search over the embeddings table.
@@ -32,32 +33,22 @@ object ExtVectorQueries {
   /** Persisted production ANN index for q_x_ann_index_census /
     * q_x_ann_index_serve: built ONCE per (dir, embeddings mtime) via
     * [[graft.serve.AnnIndex.build]] with √n cells — the registry rows then
-    * exercise the read-back paths every run (the standingIndexRoot
-    * memoization pattern). The root is a FIXED path keyed by the SF-dir
-    * basename, NOT a random temp dir, because the census oracle must
-    * `read_parquet` the SAME persisted codebook the assignments were
-    * computed from — the argmin replay is deterministic only GIVEN those
-    * exact stored doubles (the Lloyd training itself is shuffle-order).
+    * exercise the read-back paths every run. The root is a FIXED path
+    * keyed by the SF-dir basename, NOT a random temp dir, because the
+    * census oracle must `read_parquet` the SAME persisted codebook the
+    * assignments were computed from — the argmin replay is deterministic
+    * only GIVEN those exact stored doubles (the Lloyd training itself is
+    * shuffle-order). [[Publish.publishOnce]] builds it whole (the serve
+    * oracle globs `seg-*`) and never deletes a live root.
     */
-  private val annIndexRoots =
-    scala.collection.concurrent.TrieMap.empty[(String, Long), String]
+  private val annRoots = new Publish.FileMemo[String]
   private[queries] def annIndexRoot(s: SparkSession, dir: String): String = {
-    val conf = s.sessionState.newHadoopConf()
-    val src = new org.apache.hadoop.fs.Path(s"$dir/embeddings.parquet")
-    val mtime = src.getFileSystem(conf).getFileStatus(src).getModificationTime
-    annIndexRoots.getOrElseUpdate((dir, mtime), {
-      val root = s"$AnnIndexBase/${new java.io.File(dir).getName}"
-      // clean room: build() publishes a fresh manifest but does not prune
-      // prior JVMs' segment dirs, and the serve oracle reads the
-      // assignments by seg-* GLOB (static SQL cannot walk the manifest) —
-      // a stale segment would poison the replay
-      val rootPath = new org.apache.hadoop.fs.Path(root)
-      val fs = rootPath.getFileSystem(conf)
-      if (fs.exists(rootPath)) fs.delete(rootPath, true)
+    val nCells = annCells(embeddingCount(s, dir))
+    Publish.sourcedRoot(annRoots, s, AnnIndexBase, dir, s"$dir/embeddings.parquet",
+        s"AnnIndex.build vec_id embedding nCells=$nCells") { root =>
       graft.serve.AnnIndex.build(s, root, Tables.embeddings(s, dir),
-        "vec_id", "embedding", nCells = annCells(embeddingCount(s, dir)))
-      root
-    })
+        "vec_id", "embedding", nCells = nCells)
+    }
   }
 
   /** Must stay in sync with the literal path inside the
@@ -71,27 +62,21 @@ object ExtVectorQueries {
     * (vec_id % 3 == 0 — the q_x_incr_neardup split), for the
     * admission-shape row q_x_ann_index_admit: admission needs incoming
     * DISJOINT from the indexed corpus, which the full-corpus serve index
-    * cannot provide. Same clean-room build + memoization as
-    * [[annIndexRoot]]; path pinned for the static oracle.
+    * cannot provide. Same publish + memoization as [[annIndexRoot]]; path
+    * pinned for the static oracle.
     */
   private val AnnAdmitIndexBase = "/tmp/graft_ann_admit_index"
-  private val annAdmitRoots =
-    scala.collection.concurrent.TrieMap.empty[(String, Long), String]
+  private val annAdmitRoots = new Publish.FileMemo[String]
   private def annAdmitIndexRoot(s: SparkSession, dir: String): String = {
-    val conf = s.sessionState.newHadoopConf()
-    val src = new org.apache.hadoop.fs.Path(s"$dir/embeddings.parquet")
-    val mtime = src.getFileSystem(conf).getFileStatus(src).getModificationTime
-    annAdmitRoots.getOrElseUpdate((dir, mtime), {
-      val root = s"$AnnAdmitIndexBase/${new java.io.File(dir).getName}"
-      val rootPath = new org.apache.hadoop.fs.Path(root)
-      val fs = rootPath.getFileSystem(conf)
-      if (fs.exists(rootPath)) fs.delete(rootPath, true)
+    val nCells = annCells((embeddingCount(s, dir) / 3).max(1L))
+    Publish.sourcedRoot(annAdmitRoots, s, AnnAdmitIndexBase, dir,
+        s"$dir/embeddings.parquet",
+        s"AnnIndex.build vec_id%3=0 embedding nCells=$nCells") { root =>
       val standing = Tables.embeddings(s, dir)
         .filter(pmod(col("vec_id"), lit(3)) === 0)
       graft.serve.AnnIndex.build(s, root, standing, "vec_id", "embedding",
-        nCells = annCells((embeddingCount(s, dir) / 3).max(1L)))
-      root
-    })
+        nCells = nCells)
+    }
   }
 
   /** The fixed serving batch: the 100 lowest vec_ids — CONSTANT-size at
@@ -105,24 +90,17 @@ object ExtVectorQueries {
   /** Third persisted index: the full-corpus IVFPQ (coarse √n cells + 8×16
     * PQ codebooks + per-vector codes) for q_x_ann_index_serve_pq — its
     * ADC search reads cells and codes ONLY, never raw embeddings. Same
-    * clean-room build + memoization; path pinned for the static oracle.
+    * publish + memoization; path pinned for the static oracle.
     */
   private val AnnPqIndexBase = "/tmp/graft_ann_pq_index"
-  private val annPqRoots =
-    scala.collection.concurrent.TrieMap.empty[(String, Long), String]
+  private val annPqRoots = new Publish.FileMemo[String]
   private def annPqIndexRoot(s: SparkSession, dir: String): String = {
-    val conf = s.sessionState.newHadoopConf()
-    val src = new org.apache.hadoop.fs.Path(s"$dir/embeddings.parquet")
-    val mtime = src.getFileSystem(conf).getFileStatus(src).getModificationTime
-    annPqRoots.getOrElseUpdate((dir, mtime), {
-      val root = s"$AnnPqIndexBase/${new java.io.File(dir).getName}"
-      val rootPath = new org.apache.hadoop.fs.Path(root)
-      val fs = rootPath.getFileSystem(conf)
-      if (fs.exists(rootPath)) fs.delete(rootPath, true)
+    val nCells = annCells(embeddingCount(s, dir))
+    Publish.sourcedRoot(annPqRoots, s, AnnPqIndexBase, dir, s"$dir/embeddings.parquet",
+        s"AnnIndex.buildPq vec_id embedding nCells=$nCells") { root =>
       graft.serve.AnnIndex.buildPq(s, root, Tables.embeddings(s, dir),
-        "vec_id", "embedding", nCells = annCells(embeddingCount(s, dir)))
-      root
-    })
+        "vec_id", "embedding", nCells = nCells)
+    }
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

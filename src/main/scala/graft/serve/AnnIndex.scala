@@ -1,6 +1,6 @@
 package graft.serve
 
-import org.apache.hadoop.fs.{FileContext, Options, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -14,7 +14,8 @@ import graft.operators.Similarity
   * codebook with no retrain (assignment is a deterministic narrow map given
   * the codebook, [[Similarity.ivfAssignWith]]).
   *
-  * Layout mirrors [[DedupIndex]]'s manifest idiom:
+  * Layout: a [[Publish]] segment list, as in [[DedupIndex]] (one writer
+  * per index for `append`):
   * {{{
   *   <root>/_MANIFEST              — newline-separated live segment names
   *   <root>/codebook/              — (cell, centroid array<float>) rows
@@ -47,8 +48,8 @@ object AnnIndex {
     cb.select(explode(col("cb")).as("s"))
       .select(col("s.cell").as("cell"), col("s.centroid").as("centroid"))
       .write.mode(SaveMode.Overwrite).parquet(new Path(root, "codebook").toString)
-    val seg = writeAssignments(spark, root, corpus, idCol, embCol)
-    publishManifest(spark, root, Seq(seg))
+    Publish.startSegments(spark, root,
+      writeAssignments(spark, root, corpus, idCol, embCol))
   }
 
   /** Assign one new batch with the PERSISTED codebook (no retrain — the
@@ -57,8 +58,8 @@ object AnnIndex {
     */
   def append(spark: SparkSession, root: String, newVecs: DataFrame,
       idCol: String, embCol: String): Unit = {
-    val seg = writeAssignments(spark, root, newVecs, idCol, embCol)
-    publishManifest(spark, root, readManifest(spark, root) :+ seg)
+    Publish.appendSegment(spark, root,
+      writeAssignments(spark, root, newVecs, idCol, embCol))
   }
 
   /** [[build]] with the PQ layer — the persisted FAISS **IVFPQ** lifecycle:
@@ -85,8 +86,8 @@ object AnnIndex {
       .select(col("s.sub").as("sub"), col("s.cell").as("cell"),
         col("s.centroid").as("centroid"))
       .write.mode(SaveMode.Overwrite).parquet(new Path(root, "pq").toString)
-    val seg = writeAssignments(spark, root, corpus, idCol, embCol)
-    publishManifest(spark, root, Seq(seg))
+    Publish.startSegments(spark, root,
+      writeAssignments(spark, root, corpus, idCol, embCol))
   }
 
   /** The stored PQ codebooks re-collected to the one-row broadcast shape
@@ -164,7 +165,7 @@ object AnnIndex {
 
   /** The standing (id, cell) assignment table — union of live segments. */
   def readAssignments(spark: SparkSession, root: String): DataFrame =
-    readManifest(spark, root)
+    Publish.segments(spark, root)
       .map(seg => spark.read.parquet(new Path(root, seg).toString))
       .reduce(_.unionByName(_))
 
@@ -239,33 +240,20 @@ object AnnIndex {
     * [[DedupIndex.compact]] contract; the codebook is shared and untouched).
     */
   def compact(spark: SparkSession, root: String,
-      retentionMs: Long = Materialize.PruneRetentionMs): Unit = {
-    val live = readManifest(spark, root)
-    if (live.size <= 1) return
-    val seg = newSegmentName()
-    spark.read.parquet(live.map(s => new Path(root, s).toString): _*)
-      .write.mode(SaveMode.Overwrite).parquet(new Path(root, seg).toString)
-    publishManifest(spark, root, Seq(seg))
-    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val now = System.currentTimeMillis()
-    fs.listStatus(new Path(root)).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("seg-") &&
-        s.getPath.getName != seg)
-      .filter(s => now - s.getModificationTime > retentionMs)
-      .foreach(s => fs.delete(s.getPath, true))
-  }
+      retentionMs: Long = Materialize.PruneRetentionMs): Unit =
+    Publish.compact(spark, root, retentionMs) { (live, seg) =>
+      spark.read.parquet(live.map(s => new Path(root, s).toString): _*)
+        .write.mode(SaveMode.Overwrite).parquet(new Path(root, seg).toString)
+    }
 
-  // ---- internals (the DedupIndex manifest idiom) -----------------------
-
-  private def newSegmentName(): String =
-    s"seg-${System.currentTimeMillis()}-${java.util.UUID.randomUUID().toString.take(8)}"
+  // ---- internals -------------------------------------------------------
 
   // build()/buildPq() write the codebook(s) before the first assignment,
   // so the stored artifacts are always present here; the PQ layer's codes
   // ride a batch-sized id join (never a corpus shuffle)
   private def writeAssignments(spark: SparkSession, root: String,
       vecs: DataFrame, idCol: String, embCol: String): String = {
-    val seg = newSegmentName()
+    val seg = Publish.newSegment()
     val cells = Similarity.ivfAssignWith(vecs, embCol, col(idCol).as("id"), 1,
         readCodebook(spark, root))
       .select(col("id"), col("cell"))
@@ -278,27 +266,5 @@ object AnnIndex {
       } else cells
     out.write.mode(SaveMode.Overwrite).parquet(new Path(root, seg).toString)
     seg
-  }
-
-  private def manifestPath(root: String) = new Path(root, "_MANIFEST")
-
-  private def readManifest(spark: SparkSession, root: String): Seq[String] = {
-    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(manifestPath(root))
-    try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-      .map(_.trim).filter(_.nonEmpty).toList
-    finally in.close()
-  }
-
-  private def publishManifest(spark: SparkSession, root: String,
-      segments: Seq[String]): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val rootP = new Path(root)
-    val fs = rootP.getFileSystem(conf)
-    val tmp = new Path(rootP, s"_MANIFEST.tmp.${java.util.UUID.randomUUID().toString.take(8)}")
-    val out = fs.create(tmp, true)
-    try out.write(segments.mkString("\n").getBytes("UTF-8")) finally out.close()
-    FileContext.getFileContext(rootP.toUri, conf)
-      .rename(tmp, manifestPath(root), Options.Rename.OVERWRITE)
   }
 }

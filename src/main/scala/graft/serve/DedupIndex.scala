@@ -1,7 +1,7 @@
 package graft.serve
 
 import java.io.ByteArrayInputStream
-import org.apache.hadoop.fs.{FileContext, Options, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
@@ -24,8 +24,8 @@ import graft.operators.Dedup
   *   <root>/seg-<millis>-<uuid>/shingles/  (idCol, ss sorted-hash array)
   *   <root>/seg-<millis>-<uuid>/bloom/     one row (num_bits, n_keys, bytes)
   * }}}
-  * The manifest is repointed by rename-with-overwrite (atomic on local FS
-  * and HDFS), so a reader mid-admission keeps a complete segment list;
+  * The manifest is a [[Publish]] segment list, so a reader mid-admission
+  * keeps a complete segment list and `append` assumes one writer per index;
   * [[compact]] folds all live segments into one (bands unioned, Bloom
   * sketches merged via Spark's own `BloomFilter.mergeInPlace` — exact bitset
   * union because every segment is sized with the manifest-pinned numBits)
@@ -53,8 +53,8 @@ object DedupIndex {
     */
   def build(spark: SparkSession, root: String, standing: DataFrame,
       idCol: String, textCol: String, p: Params = Params()): Unit = {
-    val seg = writeSegment(spark, root, standing, idCol, textCol, p)
-    publishManifest(spark, root, Seq(seg))
+    Publish.startSegments(spark, root,
+      writeSegment(spark, root, standing, idCol, textCol, p))
   }
 
   /** Append one admitted batch's signatures as a new segment (the docs that
@@ -74,13 +74,13 @@ object DedupIndex {
         s"derive numBits=$newBits but the index's segments are pinned at " +
         s"numBits=$pinnedBits — segment Blooms must be sized identically to " +
         "stay mergeable; pass the build-time Params")
-    val seg = writeSegment(spark, root, admitted, idCol, textCol, p)
-    publishManifest(spark, root, readManifest(spark, root) :+ seg)
+    Publish.appendSegment(spark, root,
+      writeSegment(spark, root, admitted, idCol, textCol, p))
   }
 
   /** The standing corpus's band table — union of all live segments. */
   def readBands(spark: SparkSession, root: String): DataFrame =
-    readManifest(spark, root)
+    Publish.segments(spark, root)
       .map(seg => spark.read.parquet(new Path(root, s"$seg/bands").toString))
       .reduce(_.unionByName(_))
 
@@ -90,7 +90,7 @@ object DedupIndex {
     * persisted shingle sets (semi-joined down to candidates first).
     */
   def readShingles(spark: SparkSession, root: String): DataFrame =
-    readManifest(spark, root)
+    Publish.segments(spark, root)
       .map(seg => spark.read.parquet(new Path(root, s"$seg/shingles").toString))
       .reduce(_.unionByName(_))
 
@@ -99,7 +99,7 @@ object DedupIndex {
     * construction). Driver-side KBs, the [[Dedup.buildKeyBloom]] shape.
     */
   def readBloom(spark: SparkSession, root: String): Option[Array[Byte]] = {
-    val parts = readManifest(spark, root).flatMap { seg =>
+    val parts = Publish.segments(spark, root).flatMap { seg =>
       spark.read.parquet(new Path(root, s"$seg/bloom").toString)
         .select(col("bytes")).collect().map(_.getAs[Array[Byte]]("bytes"))
     }.filter(_.nonEmpty) // an empty-cohort segment stores a zero-byte marker
@@ -169,26 +169,18 @@ object DedupIndex {
     * the [[Materialize.PruneRetentionMs]] argument).
     */
   def compact(spark: SparkSession, root: String,
-      retentionMs: Long = Materialize.PruneRetentionMs): Unit = {
-    val live = readManifest(spark, root)
-    if (live.size <= 1) return
-    val seg = newSegmentName()
-    spark.read.parquet(live.map(s => new Path(root, s"$s/bands").toString): _*)
-      .write.mode(SaveMode.Overwrite)
-      .parquet(new Path(root, s"$seg/bands").toString)
-    spark.read.parquet(live.map(s => new Path(root, s"$s/shingles").toString): _*)
-      .write.mode(SaveMode.Overwrite)
-      .parquet(new Path(root, s"$seg/shingles").toString)
-    writeBloomRow(spark, root, seg, readBloom(spark, root),
-      readBloomMeta(spark, root))
-    publishManifest(spark, root, Seq(seg))
-    prune(spark, root, keep = Set(seg), retentionMs)
-  }
+      retentionMs: Long = Materialize.PruneRetentionMs): Unit =
+    Publish.compact(spark, root, retentionMs) { (live, seg) =>
+      Seq("bands", "shingles").foreach { part =>
+        spark.read.parquet(live.map(s => new Path(root, s"$s/$part").toString): _*)
+          .write.mode(SaveMode.Overwrite)
+          .parquet(new Path(root, s"$seg/$part").toString)
+      }
+      writeBloomRow(spark, root, seg, readBloom(spark, root),
+        readBloomMeta(spark, root))
+    }
 
   // ---- internals -----------------------------------------------------
-
-  private def newSegmentName(): String =
-    s"seg-${System.currentTimeMillis()}-${java.util.UUID.randomUUID().toString.take(8)}"
 
   private def bloomNumBits(p: Params): Long =
     math.ceil(-p.expectedItems * math.log(p.fpp) /
@@ -196,7 +188,7 @@ object DedupIndex {
 
   private def writeSegment(spark: SparkSession, root: String, docs: DataFrame,
       idCol: String, textCol: String, p: Params): String = {
-    val seg = newSegmentName()
+    val seg = Publish.newSegment()
     Dedup.textBands(docs, idCol, textCol, p.numHashes, p.rowsPerBand, p.shingleN)
       .write.mode(SaveMode.Overwrite)
       .parquet(new Path(root, s"$seg/bands").toString)
@@ -224,45 +216,9 @@ object DedupIndex {
   }
 
   private def readBloomMeta(spark: SparkSession, root: String): (Long, Long) = {
-    val r = spark.read.parquet(readManifest(spark, root)
+    val r = spark.read.parquet(Publish.segments(spark, root)
         .map(s => new Path(root, s"$s/bloom").toString): _*)
       .agg(max(col("num_bits")), sum(col("n_keys"))).head
     (r.getLong(0), r.getLong(1))
-  }
-
-  private def manifestPath(root: String) = new Path(root, "_MANIFEST")
-
-  private def readManifest(spark: SparkSession, root: String): Seq[String] = {
-    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(manifestPath(root))
-    try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-      .map(_.trim).filter(_.nonEmpty).toList
-    finally in.close()
-  }
-
-  private def publishManifest(spark: SparkSession, root: String,
-      segments: Seq[String]): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val rootP = new Path(root)
-    val fs = rootP.getFileSystem(conf)
-    val tmp = new Path(rootP, s"_MANIFEST.tmp.${java.util.UUID.randomUUID().toString.take(8)}")
-    val out = fs.create(tmp, true)
-    try out.write(segments.mkString("\n").getBytes("UTF-8")) finally out.close()
-    FileContext.getFileContext(rootP.toUri, conf)
-      .rename(tmp, manifestPath(root), Options.Rename.OVERWRITE)
-  }
-
-  /** Delete segment dirs not in `keep` once superseded for `retentionMs`
-    * (mtime ≈ write time — the [[Materialize.prune]] age argument).
-    */
-  private def prune(spark: SparkSession, root: String, keep: Set[String],
-      retentionMs: Long): Unit = {
-    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val now = System.currentTimeMillis()
-    fs.listStatus(new Path(root)).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("seg-"))
-      .filterNot(s => keep.contains(s.getPath.getName))
-      .filter(s => now - s.getModificationTime > retentionMs)
-      .foreach(s => fs.delete(s.getPath, true))
   }
 }

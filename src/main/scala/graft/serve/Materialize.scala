@@ -1,7 +1,7 @@
 package graft.serve
 
 import java.util.concurrent.{ConcurrentHashMap, Executors, Future, ThreadFactory}
-import org.apache.hadoop.fs.{FileContext, Options, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 /** Serving-layer equivalent of the reference's cache tier (SURVEY §2.12):
@@ -10,13 +10,13 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * (etl-api/src/handler/cache_refresher.rs:41-69,164-200).
   *
   * Snapshot layout: each build writes a fresh `v<millis>` directory under the
-  * table path, then atomically repoints the `_CURRENT` pointer file
-  * (rename-with-overwrite — atomic on both local FS and HDFS). Readers
-  * resolve the pointer at read time, so a reader during a rebuild keeps the
-  * old complete snapshot; there is never a moment where the table is missing
-  * or half-written (the round-1 SaveMode.Overwrite-in-place design had both
-  * failure modes). The previous version is retained for in-flight readers;
-  * older ones are pruned.
+  * table path, then repoints the `_CURRENT` pointer file through
+  * [[Publish.writePointer]] ([[Publish]] says what is atomic on which file
+  * system). Readers resolve the pointer at read time, so a reader during a
+  * rebuild keeps the old complete snapshot; there is never a moment where
+  * the table is missing or half-written (the round-1
+  * SaveMode.Overwrite-in-place design had both failure modes). The previous
+  * version is retained for in-flight readers; older ones are pruned.
   *
   * Stampede guard: staleness is re-checked under a per-path lock, so
   * concurrent stale readers in one process coalesce into a single build.
@@ -96,34 +96,26 @@ object Materialize {
     else Some((System.currentTimeMillis() - fs.getFileStatus(ptr).getModificationTime) / 1000)
   }
 
-  /** Build into a fresh version directory, atomically repoint `_CURRENT`,
-    * prune everything but the new and the previously-pointed version.
+  /** Build into a fresh version directory, repoint `_CURRENT`, prune
+    * everything but the new and the previously-pointed version.
     */
   private def publish(spark: SparkSession, path: String, build: => DataFrame): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
     val root = new Path(path)
-    val fs = root.getFileSystem(conf)
     // the version the pointer held BEFORE this publish is the one in-flight
     // readers may still be scanning — prune keeps exactly {new, previous},
     // never trusting directory names (a partial dir from a failed build must
     // not displace the real previous snapshot)
-    val prev = if (fs.exists(new Path(root, "_CURRENT"))) Some(currentVersion(spark, path)) else None
+    val prev = ageSeconds(spark, path).map(_ => currentVersion(spark, path))
     val version = s"v${System.currentTimeMillis()}-${java.util.UUID.randomUUID().toString.take(8)}"
     build.write.mode(SaveMode.Overwrite).parquet(new Path(root, version).toString)
-    val tmp = new Path(root, s"_CURRENT.tmp.$version")
-    val out = fs.create(tmp, true)
-    try out.write(version.getBytes("UTF-8")) finally out.close()
-    // rename-with-overwrite is the atomic publish point on local FS and HDFS
-    FileContext.getFileContext(root.toUri, conf)
-      .rename(tmp, new Path(root, "_CURRENT"), Options.Rename.OVERWRITE)
-    prune(spark, path, keepVersions = Set(version) ++ prev)
+    Publish.writePointer(spark, new Path(root, "_CURRENT"), version)
+    // also keep the two most recent directories: a cross-process
+    // publisher's {new, prev} this process never pointed at
+    Publish.prune(spark, path, "v", Set(version) ++ prev, PruneRetentionMs, keepNewest = 2)
   }
 
-  private def currentVersion(spark: SparkSession, path: String): String = {
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(new Path(path, "_CURRENT"))
-    try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim finally in.close()
-  }
+  private def currentVersion(spark: SparkSession, path: String): String =
+    Publish.readPointer(spark, new Path(path, "_CURRENT")).trim
 
   private def readCurrent(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(new Path(path, currentVersion(spark, path)).toString)
@@ -135,25 +127,4 @@ object Materialize {
     * after just two iterations). Size to the longest expected query.
     */
   val PruneRetentionMs: Long = 30 * 60 * 1000L
-
-  /** Delete version directories outside `keepVersions` (the just-published
-    * snapshot + the previously-pointed one readers may still hold), the two
-    * most recent directories (a cross-process publisher's {new, prev} this
-    * process never pointed at), and anything younger than
-    * [[PruneRetentionMs]] — mtime ≈ publish time, so the age test means "has
-    * been superseded long enough that no sane reader still scans it".
-    */
-  private def prune(spark: SparkSession, path: String, keepVersions: Set[String]): Unit = {
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val now = System.currentTimeMillis()
-    val versions = fs.listStatus(new Path(path)).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("v"))
-    val mostRecent = versions.sortBy(-_.getModificationTime).take(2)
-      .map(_.getPath.getName).toSet
-    versions
-      .filterNot(s => keepVersions.contains(s.getPath.getName))
-      .filterNot(s => mostRecent.contains(s.getPath.getName))
-      .filter(s => now - s.getModificationTime > PruneRetentionMs)
-      .foreach(s => fs.delete(s.getPath, true))
-  }
 }

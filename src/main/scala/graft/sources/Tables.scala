@@ -25,14 +25,12 @@ object Tables {
     * count JOB at plan-build time. Listing is single-level (Spark's own
     * flat layout); a partition-nested table would need a recursive walk.
     */
-  private val footerCounts =
-    scala.collection.concurrent.TrieMap.empty[(String, Long), Long]
-  def parquetRecordCount(s: SparkSession, path: String): Long = {
-    val conf = s.sessionState.newHadoopConf()
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(conf)
-    val mtime = fs.getFileStatus(root).getModificationTime
-    footerCounts.getOrElseUpdate((path, mtime), {
+  private val footerCounts = new graft.serve.Publish.FileMemo[Long]
+  def parquetRecordCount(s: SparkSession, path: String): Long =
+    footerCounts(s, path) { _ =>
+      val conf = s.sessionState.newHadoopConf()
+      val root = new org.apache.hadoop.fs.Path(path)
+      val fs = root.getFileSystem(conf)
       val files =
         if (fs.getFileStatus(root).isDirectory)
           fs.listStatus(root).toSeq.map(_.getPath)
@@ -43,8 +41,7 @@ object Tables {
         val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
         try r.getRecordCount finally r.close()
       }.sum
-    })
-  }
+    }
 
   /** Footer-statistics row count for a DataFrame that is a PLAIN parquet
     * scan — Project/SubqueryAlias layers over one file relation, nothing

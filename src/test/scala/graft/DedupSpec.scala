@@ -1043,11 +1043,11 @@ class DedupSpec extends SparkSpec {
     val sc = spark.sparkContext
     sc.addSparkListener(listener)
     try {
-      org.apache.spark.graft.TestListenerBus.drain(sc)
+      org.apache.spark.sql.graft.ListenerBus.drain(sc)
       sites.clear()
       Dedup.blockingQuality(raw, "doc_id", "text",
         q = 16, maxDist = 4, maxSampleRows = Some(50L))
-      org.apache.spark.graft.TestListenerBus.drain(sc)
+      org.apache.spark.sql.graft.ListenerBus.drain(sc)
       val countJobs = sites.toArray(Array.empty[String])
         .filter(_.startsWith("count at"))
       assert(countJobs.isEmpty,

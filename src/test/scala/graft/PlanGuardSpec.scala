@@ -87,7 +87,7 @@ class PlanGuardSpec extends SparkSpec {
     // multi-consumer reason as the MinHash family
     "q_lit_daily_open_close", "q_lit_realized_pnl")
 
-  /** Builders backed by a MEMOIZED artifact (the docBloom TrieMap): the
+  /** Builders backed by a MEMOIZED artifact (the docBloom memo): the
     * FIRST build per (dir, mtime) runs the sketch-building job, every
     * later build is job-free — so their tier depends on cache state and
     * is asserted in neither direction.
@@ -124,10 +124,10 @@ class PlanGuardSpec extends SparkSpec {
       val offenders = Seq.newBuilder[String]
       val lazyExempt = Seq.newBuilder[String]
       SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-        org.apache.spark.graft.TestListenerBus.drain(sc)
+        org.apache.spark.sql.graft.ListenerBus.drain(sc)
         sites.clear()
         fn(spark, sfDir).queryExecution.sparkPlan
-        org.apache.spark.graft.TestListenerBus.drain(sc)
+        org.apache.spark.sql.graft.ListenerBus.drain(sc)
         // parquet footer/schema-inference reads ("parquet at ...") are
         // metadata jobs every spark.read pays once per table reference —
         // not query execution; everything else counts
