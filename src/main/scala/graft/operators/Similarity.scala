@@ -598,15 +598,40 @@ object Similarity {
       .withColumnRenamed("__e", "__ce")
     val q = ivfAssignCells(queries, embCol, col(queryIdCol).as("query_id"), nProbe, codebook)
       .withColumnRenamed("__e", "__qe")
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cs").desc, col("neighbor_id").asc)
-    c.join(q, Seq("cell"))
+    topKPerQuery(c.join(q, Seq("cell"))
       .filter(col("neighbor_id") =!= col("query_id"))
       .select(col("query_id"), col("neighbor_id"),
-        cosineSim(col("__qe"), col("__ce")).as("cs"))
-      .dropDuplicates("query_id", "neighbor_id")
-      .withColumn("rank", row_number().over(w))
+        cosineSim(col("__qe"), col("__ce")).as("cs")), "cs", k)
+  }
+
+  /** Top-`k` (query_id, rank, neighbor_id) rows of scored candidates
+    * (query_id, neighbor_id, `scoreCol`) in which one pair may come more
+    * than once (a query probes several cells; an id sits in two segments):
+    * `dense_rank()` over (score DESC, neighbor_id ASC) per query, keep
+    * rank ≤ k, then one row per (query_id, rank, neighbor_id). The rank is
+    * an IntegerType, 1-based, with ties in score broken by neighbor id.
+    *
+    * Contract: the rows equal the distinct (query_id, neighbor_id, score)
+    * triples ranked by `row_number()` over the same order. Copies of one
+    * triple tie in the order, so they share a dense rank and collapse in
+    * the final dedup; distinct triples of one query differ in (score,
+    * neighbor_id) and rank consecutively. That is exact for the PQ forms,
+    * which ranked distinct triples. The cosine forms deduplicated on
+    * (query_id, neighbor_id) alone, which is the same thing while a pair's
+    * copies carry one score, i.e. while corpus ids are unique; an id with
+    * two embeddings was an arbitrary pick there and is ranked twice here.
+    *
+    * Cost: one exchange. The dedup groups by keys that include the
+    * window's `query_id`, so it runs on the window's partitioning; the
+    * dedup-then-rank form needed a second exchange on (query_id,
+    * neighbor_id).
+    */
+  private[graft] def topKPerQuery(scored: DataFrame, scoreCol: String, k: Int): DataFrame = {
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col(scoreCol).desc, col("neighbor_id").asc)
+    scored.withColumn("rank", dense_rank().over(w))
       .filter(col("rank") <= k)
+      .dropDuplicates("query_id", "rank", "neighbor_id")
       .select(col("query_id"), col("rank"), col("neighbor_id"))
   }
 
@@ -876,20 +901,13 @@ object Similarity {
     val q = qCells.crossJoin(broadcast(pq))
       .select(col("query_id"), col("cell"),
         pqLutMap(nCodewords, sd, "cb", "__e").as("lut"))
-    val scored = c.join(q, Seq("cell"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("score", org.apache.spark.sql.graft.natives
-        .pqAdcScore(col("lut"), col("codes"), nCodewords))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("neighbor_id").asc)
     // a corpus vector can meet a query in only ONE cell (corpus assignment
-    // keeps the single best cell), but keep the dedup structural in case a
-    // future multi-assignment corpus tier lands: identical (query,
-    // neighbor, score) rows collapse before ranking
-    scored.select(col("query_id"), col("neighbor_id"), col("score")).distinct()
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"))
+    // keeps the single best cell), but topKPerQuery keeps the dedup
+    // structural in case a future multi-assignment corpus tier lands
+    topKPerQuery(c.join(q, Seq("cell"))
+      .filter(col("neighbor_id") =!= col("query_id"))
+      .select(col("query_id"), col("neighbor_id"), org.apache.spark.sql.graft.natives
+        .pqAdcScore(col("lut"), col("codes"), nCodewords).as("score")), "score", k)
   }
 
   /** Contrastive hard-negative mining (the DPR / SimCSE training-data

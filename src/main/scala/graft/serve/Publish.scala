@@ -124,16 +124,34 @@ private[graft] object Publish {
       .foreach(s => fs.delete(s.getPath, true))
   }
 
-  /** A value derived from one file, computed once per (file, mtime). */
+  /** A value derived from one file, computed once per (file, mtime). Only
+    * the value of a file's latest mtime is kept, so a file rewritten over
+    * and over holds one entry, not one per version.
+    */
   final class FileMemo[V] {
-    private val memo = scala.collection.concurrent.TrieMap.empty[(String, Long), V]
+    private val memo = scala.collection.concurrent.TrieMap.empty[String, (Long, V)]
+
+    private def mtimeOf(s: SparkSession, file: String): Long = {
+      val p = new Path(file)
+      p.getFileSystem(s.sessionState.newHadoopConf()).getFileStatus(p).getModificationTime
+    }
 
     def apply(s: SparkSession, file: String)(derive: Long => V): V = {
-      val p = new Path(file)
-      val mtime = p.getFileSystem(s.sessionState.newHadoopConf())
-        .getFileStatus(p).getModificationTime
-      memo.getOrElseUpdate((file, mtime), derive(mtime))
+      val mtime = mtimeOf(s, file)
+      memo.get(file) match {
+        case Some((`mtime`, v)) => v
+        case _ =>
+          val v = derive(mtime)
+          memo.put(file, (mtime, v))
+          v
+      }
     }
+
+    /** Record `v` as the value of `file` as it is now — for a writer that
+      * already holds what a reader would derive from the file it wrote.
+      */
+    def seed(s: SparkSession, file: String, v: V): Unit =
+      memo.put(file, (mtimeOf(s, file), v))
   }
 
   /** [[publishOnce]] of `<base>/<basename of dir>`, stamped with `source`'s

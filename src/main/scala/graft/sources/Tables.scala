@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** Loaders for the driver-generated star-schema test tables (TESTDATA.md).
   *
@@ -88,12 +89,17 @@ object Tables {
     * Schema-adaptive: µs/ms-precision copies of the table (already in Spark's
     * native range, so the legacy conf leaves them as timestamps) pass through
     * with only a session-TZ cast — real lakes mix precisions across writers.
+    * The schema is inferred once per (file, mtime), always under the
+    * nanos-as-long setting this read sets first, so a re-read (every ingest
+    * replay) runs no footer-inference job.
     */
+  private val eventSchemas = new graft.serve.Publish.FileMemo[StructType]
   def events(s: SparkSession, d: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = table(s, d, "events")
+    val path = s"$d/events.parquet"
+    val raw = s.read.schema(eventSchemas(s, path)(_ => s.read.parquet(path).schema)).parquet(path)
     raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
+      case LongType =>
         raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
       case _ => raw.withColumn("ts", col("ts").cast("timestamp"))
     }

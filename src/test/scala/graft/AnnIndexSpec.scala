@@ -1,7 +1,9 @@
 package graft
 
-import java.nio.file.Files
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import graft.operators.Similarity
 import graft.serve.AnnIndex
@@ -12,7 +14,7 @@ import graft.serve.AnnIndex
   * the cells a fresh assignment with the same codebook gives (no retrain),
   * and search output is invariant under segment layout.
   */
-class AnnIndexSpec extends SparkSpec {
+class AnnIndexSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   private def emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
@@ -24,7 +26,7 @@ class AnnIndexSpec extends SparkSpec {
     val base = emb.filter(pmod(col("vec_id"), lit(3)) =!= 0)
     val extra = emb.filter(pmod(col("vec_id"), lit(3)) === 0)
     val queries = emb.filter(pmod(col("vec_id"), lit(97)) === 1)
-    val root = Files.createTempDirectory("graft_ann_idx").toString
+    val root = tempDir("graft_ann_idx").toString
     AnnIndex.build(spark, root, base, "vec_id", "embedding",
       nCells = 16, lloydIters = 2)
 
@@ -81,7 +83,7 @@ class AnnIndexSpec extends SparkSpec {
     import org.apache.spark.sql.graft.natives.cosineSim
     val standing = emb.filter(pmod(col("vec_id"), lit(3)) === 0)
     val incoming = emb.filter(pmod(col("vec_id"), lit(3)) =!= 0)
-    val root = Files.createTempDirectory("graft_ann_idx_admit").toString
+    val root = tempDir("graft_ann_idx_admit").toString
     AnnIndex.build(spark, root, standing, "vec_id", "embedding", nCells = 8)
     val rej = AnnIndex.admitNearDups(spark, root, incoming, standing,
         "vec_id", "embedding", threshold = 0.25, nProbe = 4)
@@ -109,7 +111,7 @@ class AnnIndexSpec extends SparkSpec {
     val base = emb.filter(pmod(col("vec_id"), lit(3)) =!= 0)
     val extra = emb.filter(pmod(col("vec_id"), lit(3)) === 0)
     val queries = emb.filter(pmod(col("vec_id"), lit(97)) === 1)
-    val root = Files.createTempDirectory("graft_ann_idx_pq").toString
+    val root = tempDir("graft_ann_idx_pq").toString
     AnnIndex.buildPq(spark, root, base, "vec_id", "embedding", nCells = 8)
 
     // stored (id, codes) == a fresh encode with the ROUND-TRIPPED pq
@@ -208,7 +210,7 @@ class AnnIndexSpec extends SparkSpec {
     val n = emb.count()
     val nCells = math.ceil(math.sqrt(n.toDouble)).toInt.max(1)
     val batch = emb.filter(col("vec_id") < 100)
-    val root = Files.createTempDirectory("graft_ann_idx_serve").toString
+    val root = tempDir("graft_ann_idx_serve").toString
     AnnIndex.build(spark, root, emb, "vec_id", "embedding", nCells = nCells)
     val served = canonSearch(AnnIndex.search(spark, root, emb, batch,
       "vec_id", "vec_id", "embedding", k = 5, nProbe = 8))
@@ -225,5 +227,88 @@ class AnnIndexSpec extends SparkSpec {
     assert(recall >= 0.25, s"serve-shape recall $recall below floor")
     // soundness: every served neighbor must be a real corpus id ≠ query
     assert(served.forall(r => r._1 != r._3))
+  }
+
+  /** The stored coarse codebook read straight from its parquet, in the
+    * one-row shape — what a JVM that never saw the index would serve from.
+    */
+  private def storedCodebook(root: String): DataFrame =
+    spark.read.parquet(s"$root/codebook")
+      .agg(collect_list(struct(col("cell"), col("centroid"))).as("cb"))
+
+  private def copyOf(root: String): String = {
+    val copy = tempDir("graft_ann_idx_copy").resolve("idx").toFile
+    FileUtils.copyDirectory(new java.io.File(root), copy)
+    copy.toString
+  }
+
+  test("resident codebooks: a rebuild at the same root serves from the new codebooks") {
+    val even = emb.filter(pmod(col("vec_id"), lit(2)) === 0)
+    val odd = emb.filter(pmod(col("vec_id"), lit(2)) === 1)
+    val queries = emb.filter(pmod(col("vec_id"), lit(97)) === 1)
+    def search(root: String, corpus: DataFrame) = canonSearch(AnnIndex.search(spark, root,
+      corpus, queries, "vec_id", "vec_id", "embedding", k = 5, nProbe = 4))
+    def cells(cb: DataFrame) = cb.select(explode(col("cb")).as("s"))
+      .select(col("s.cell"), col("s.centroid")).as[(Int, Seq[Float])].collect().toMap
+
+    val root = tempDir("graft_ann_idx_rebuild").toString
+    AnnIndex.build(spark, root, even, "vec_id", "embedding", nCells = 4)
+    val first = search(root, even)
+    assert(cells(AnnIndex.readCodebook(spark, root)).size == 4)
+    AnnIndex.build(spark, root, odd, "vec_id", "embedding", nCells = 6)
+    val resident = cells(AnnIndex.readCodebook(spark, root))
+    assert(resident.size == 6 && resident == cells(storedCodebook(root)),
+      "the resident codebook must be the rebuilt one")
+    val served = search(root, odd)
+    assert(served.nonEmpty && served != first)
+    assert(served == canonSearch(AnnIndex.searchWith(storedCodebook(root),
+      AnnIndex.readAssignments(spark, root), odd, queries,
+      "vec_id", "vec_id", "embedding", k = 5, nProbe = 4)))
+    assert(served == search(copyOf(root), odd), "a cold read of the same files serves the same rows")
+
+    val pqRoot = tempDir("graft_ann_idx_pq_rebuild").toString
+    def searchPq(root: String) = canonSearch(AnnIndex.searchPq(spark, root, queries,
+      "vec_id", "embedding", k = 5, nProbe = 4))
+    AnnIndex.buildPq(spark, pqRoot, even, "vec_id", "embedding", nCells = 4)
+    val firstPq = searchPq(pqRoot)
+    AnnIndex.buildPq(spark, pqRoot, odd, "vec_id", "embedding", nCells = 6, nCodewords = 8)
+    val (pqCb, m, nCw, dim) = AnnIndex.readPqCodebooks(spark, pqRoot)
+    assert((m, nCw, dim) == (8, 8, 64), s"pq meta of the rebuild: ($m, $nCw, $dim)")
+    val storedPq = spark.read.parquet(s"$pqRoot/pq").as[(Int, Int, Seq[Float])].collect().toSet
+    assert(pqCb.select(explode(col("cb")).as("s")).select("s.*")
+      .as[(Int, Int, Seq[Float])].collect().toSet == storedPq)
+    val servedPq = searchPq(pqRoot)
+    assert(servedPq.nonEmpty && servedPq != firstPq)
+    assert(servedPq == searchPq(copyOf(pqRoot)), "a cold read of the same files serves the same rows")
+  }
+
+  test("a warm search and searchPq run no footer-inference job and rank in one exchange") {
+    val n = emb.count()
+    val nCells = math.ceil(math.sqrt(n.toDouble)).toInt
+    // a serving batch staged on the driver, as a server receives it
+    val batch = emb.filter(col("vec_id") < 16).select("vec_id", "embedding")
+      .as[(Long, Seq[Float])].collect().toSeq
+      .toDF("qid", "embedding")
+    val root = tempDir("graft_ann_idx_lean").toString
+    val pqRoot = tempDir("graft_ann_idx_lean_pq").toString
+    AnnIndex.build(spark, root, emb, "vec_id", "embedding", nCells = nCells)
+    AnnIndex.buildPq(spark, pqRoot, emb, "vec_id", "embedding", nCells = nCells)
+    val corpus = emb
+    val searches = Seq[(String, () => DataFrame)](
+      "search" -> (() => AnnIndex.search(spark, root, corpus, batch,
+        "vec_id", "qid", "embedding", k = 5, nProbe = 8)),
+      "searchPq" -> (() => AnnIndex.searchPq(spark, pqRoot, batch,
+        "qid", "embedding", k = 5, nProbe = 8)))
+    for ((name, search) <- searches) {
+      val cold = search().collect().toSet
+      val (df, sites) = jobSites { val df = search(); df.collect(); df }
+      assert(df.collect().toSet == cold)
+      assert(sites.size <= 5, s"warm $name ran ${sites.size} jobs: ${sites.mkString("; ")}")
+      assert(!sites.exists(_.contains("parquet at AnnIndex")),
+        s"warm $name inferred a schema: ${sites.mkString("; ")}")
+      val exchanges = collect(df.queryExecution.executedPlan) { case e: ShuffleExchangeExec => e }
+      assert(exchanges.size == 1, s"warm $name: ${exchanges.size} shuffle exchanges in\n" +
+        df.queryExecution.executedPlan)
+    }
   }
 }

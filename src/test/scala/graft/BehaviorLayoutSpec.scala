@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import graft.functions.Ops
@@ -138,8 +137,8 @@ class BehaviorLayoutSpec extends SparkSpec {
         col("o_custkey").cast("bigint"),
         datediff(col("o_orderdate"), lit(java.sql.Date.valueOf("1995-01-01")))
           .cast("bigint")))
-    val zDir = Files.createTempDirectory("graft_zsort").toString
-    val lexDir = Files.createTempDirectory("graft_lexsort").toString
+    val zDir = tempDir("graft_zsort").toString
+    val lexDir = tempDir("graft_lexsort").toString
     base.repartitionByRange(8, col("zval")).sortWithinPartitions(col("zval"))
       .drop("zval").write.mode("overwrite").parquet(zDir)
     base.repartitionByRange(8, col("o_custkey")).sortWithinPartitions(col("o_custkey"))

@@ -23,7 +23,7 @@ class DedupIndexSpec extends SparkSpec {
       .as[(Long, Long, Double)].collect().toSet
 
   test("persisted-index admission ≡ recompute admission across two batches, then compact") {
-    val root = Files.createTempDirectory("graft_dedup_idx_spec").toString
+    val root = tempDir("graft_dedup_idx_spec").toString
     val standing0 = cohort(0)
     DedupIndex.build(spark, root, standing0, "doc_id", "text")
 
@@ -80,11 +80,11 @@ class DedupIndexSpec extends SparkSpec {
   }
 
   test("streaming gate against the persisted index equals the batch rejection list") {
-    val root = Files.createTempDirectory("graft_dedup_idx_stream").toString
+    val root = tempDir("graft_dedup_idx_stream").toString
     val standing = cohort(0).select("doc_id", "text")
     val incoming = cohort(1).select("doc_id", "text")
     DedupIndex.build(spark, root, standing, "doc_id", "text")
-    val src = Files.createTempDirectory("graft_gate_idx_src").toString
+    val src = tempDir("graft_gate_idx_src").toString
     val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
     incoming.withColumn("ingest_ts", lit(t0))
       .coalesce(1).write.mode("append").parquet(src)
@@ -109,7 +109,7 @@ class DedupIndexSpec extends SparkSpec {
   }
 
   test("segment Blooms OR-merge to the single-build sketch; exact admission matches") {
-    val root = Files.createTempDirectory("graft_dedup_idx_bloom").toString
+    val root = tempDir("graft_dedup_idx_bloom").toString
     val a = cohort(0)
     val b = cohort(1)
     DedupIndex.build(spark, root, a, "doc_id", "text")
@@ -117,7 +117,7 @@ class DedupIndexSpec extends SparkSpec {
     // merged segment sketches ≡ one sketch over the union, byte-for-byte
     // (same numBits by construction; Bloom insert is a bitset OR)
     val merged = DedupIndex.readBloom(spark, root).get
-    val oneRoot = Files.createTempDirectory("graft_dedup_idx_bloom1").toString
+    val oneRoot = tempDir("graft_dedup_idx_bloom1").toString
     DedupIndex.build(spark, oneRoot, a.unionByName(b), "doc_id", "text")
     val single = DedupIndex.readBloom(spark, oneRoot).get
     assert(java.util.Arrays.equals(merged, single),
@@ -138,7 +138,7 @@ class DedupIndexSpec extends SparkSpec {
   }
 
   test("append with mismatched Bloom sizing fails at write time, not inside readBloom") {
-    val root = Files.createTempDirectory("graft_dedup_idx_sizing").toString
+    val root = tempDir("graft_dedup_idx_sizing").toString
     DedupIndex.build(spark, root, cohort(0), "doc_id", "text")
     val manifestBefore = java.nio.file.Files.readString(
       java.nio.file.Paths.get(root, "_MANIFEST"))

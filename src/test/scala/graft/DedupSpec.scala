@@ -1032,27 +1032,11 @@ class DedupSpec extends SparkSpec {
     // listener census (r16 VERDICT item 6): constructing the capped report
     // over a raw scan must submit NO count job — the only eager jobs are
     // the operator's own localCheckpoints, identical to the uncapped build
-    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        sites.add(js.stageInfos.map(_.name).distinct.mkString(" | "))
-        ()
-      }
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      org.apache.spark.sql.graft.ListenerBus.drain(sc)
-      sites.clear()
-      Dedup.blockingQuality(raw, "doc_id", "text",
-        q = 16, maxDist = 4, maxSampleRows = Some(50L))
-      org.apache.spark.sql.graft.ListenerBus.drain(sc)
-      val countJobs = sites.toArray(Array.empty[String])
-        .filter(_.startsWith("count at"))
-      assert(countJobs.isEmpty,
-        s"raw-scan cap must size from footers, found: ${countJobs.mkString("; ")}")
-    } finally sc.removeSparkListener(listener)
+    val (_, sites) = jobSites(Dedup.blockingQuality(raw, "doc_id", "text",
+      q = 16, maxDist = 4, maxSampleRows = Some(50L)))
+    val countJobs = sites.filter(_.startsWith("count at"))
+    assert(countJobs.isEmpty,
+      s"raw-scan cap must size from footers, found: ${countJobs.mkString("; ")}")
   }
 
   test("golden records: field-level survivorship with pinned tie rules") {

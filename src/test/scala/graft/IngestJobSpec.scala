@@ -13,7 +13,7 @@ import graft.sources.Tables
 class IngestJobSpec extends SparkSpec {
 
   test("full lifecycle lands bronze/silver/gold; re-run is a no-op") {
-    val wh = Files.createTempDirectory("graft_wh").toString
+    val wh = tempDir("graft_wh").toString
     IngestJob.run(spark, sfDir, wh)
 
     val events = Tables.events(spark, sfDir)
@@ -125,18 +125,20 @@ class IngestJobSpec extends SparkSpec {
   /** The first half of the source's events by time, as a source directory. */
   private def earlierHalf(): String = {
     val n = Tables.events(spark, sfDir).count() // sets the ns-timestamp read mode
-    val dir = Files.createTempDirectory("graft_half").toString
+    val dir = tempDir("graft_half").toString
     spark.read.parquet(s"$sfDir/events.parquet").orderBy("ts", "event_id").limit((n / 2).toInt)
       .write.parquet(s"$dir/events.parquet")
     dir
   }
 
   test("no-op replay keeps silver and gold files as they are and logs 0 landed rows") {
-    val wh = Files.createTempDirectory("graft_wh").toString
+    val wh = tempDir("graft_wh").toString
     IngestJob.run(spark, sfDir, wh)
     val before = derived.map(t => t -> listing(s"$wh/$t")).toMap
     val bronze = listing(s"$wh/entities")
-    IngestJob.run(spark, sfDir, wh)
+    val (_, sites) = jobSites(IngestJob.run(spark, sfDir, wh))
+    assert(!sites.exists(_.contains("parquet at Tables.scala")),
+      s"a replay inferred the source's schema: ${sites.mkString("; ")}")
     derived.foreach(t => assert(listing(s"$wh/$t") == before(t), s"$t was rewritten"))
     assert(listing(s"$wh/entities") == bronze, "bronze changed on replay")
     assert(lastRows(wh) == (derived :+ "entities").map(_ -> 0L).toMap,
@@ -144,7 +146,7 @@ class IngestJobSpec extends SparkSpec {
   }
 
   test("a missing table, or stages stale after an interrupted run, are rebuilt exactly") {
-    val wh = Files.createTempDirectory("graft_wh").toString
+    val wh = tempDir("graft_wh").toString
     IngestJob.run(spark, sfDir, wh)
     val kept = Seq("enriched_purchases", "daily_user_state").map(t => t -> listing(s"$wh/$t")).toMap
     val gold = Files.walk(java.nio.file.Paths.get(s"$wh/gold_pl_state"))
@@ -157,7 +159,7 @@ class IngestJobSpec extends SparkSpec {
     // a run over the full source that stopped after its entities stage:
     // bronze is current, silver and gold still hold the earlier half
     val half = earlierHalf()
-    val wh2 = Files.createTempDirectory("graft_wh").toString
+    val wh2 = tempDir("graft_wh").toString
     IngestJob.run(spark, half, wh2)
     val parsed = graft.ingest.EventPipeline.parse(Tables.events(spark, sfDir))
     assert(IngestJob.landEntities(parsed, spark, wh2) > 0)
@@ -169,7 +171,7 @@ class IngestJobSpec extends SparkSpec {
 
   test("a grown source lands only its new events; silver and gold follow the full source") {
     val half = earlierHalf()
-    val wh = Files.createTempDirectory("graft_wh").toString
+    val wh = tempDir("graft_wh").toString
     IngestJob.run(spark, half, wh)
     val firstRows = lastRows(wh)("entities")
     assert(firstRows == Tables.events(spark, half).count())
@@ -207,12 +209,12 @@ class IngestJobSpec extends SparkSpec {
 
   test("an amount past the clamp fails the run before anything lands") {
     Tables.events(spark, sfDir).count() // sets the ns-timestamp read mode
-    val src = Files.createTempDirectory("graft_over").toString
+    val src = tempDir("graft_over").toString
     val raw = spark.read.parquet(s"$sfDir/events.parquet")
     val one = raw.select(min("event_id")).head().get(0)
     raw.withColumn("value", when(col("event_id") === one, lit(1e31)).otherwise(col("value")))
       .write.parquet(s"$src/events.parquet")
-    val wh = Files.createTempDirectory("graft_wh").toString
+    val wh = tempDir("graft_wh").toString
     val e = intercept[Exception](IngestJob.run(spark, src, wh))
     assert(messages(e).contains("|value| reaches 1e30"), messages(e))
     assert(!Files.exists(java.nio.file.Paths.get(wh, "entities")), "no bronze file lands")
@@ -229,11 +231,11 @@ class IngestJobSpec extends SparkSpec {
         .write.mode("append").parquet(s"$wh/run_log")
     def record(wh: String, r: (String, Long, Long, Long)): Unit =
       RunLog.record(spark, wh, r._1, r._2, r._3, r._4)
-    val old = Files.createTempDirectory("graft_log").toString
+    val old = tempDir("graft_log").toString
     rows.foreach(sparkAppend(old, _))
-    val fresh = Files.createTempDirectory("graft_log").toString
+    val fresh = tempDir("graft_log").toString
     rows.foreach(record(fresh, _))
-    val mixed = Files.createTempDirectory("graft_log").toString
+    val mixed = tempDir("graft_log").toString
     rows.zipWithIndex.foreach { case (r, i) => if (i == 1) record(mixed, r) else sparkAppend(mixed, r) }
 
     // a plain read infers the old names, types and order from the new files
@@ -260,7 +262,7 @@ class IngestJobSpec extends SparkSpec {
   test("rowsWritten: the write command's rows, or the table's count when no listener call comes") {
     import spark.implicits._
     import scala.concurrent.duration._
-    val wh = Files.createTempDirectory("graft_wh").toString
+    val wh = tempDir("graft_wh").toString
     assert(IngestJob.rowsWritten(spark, s"$wh/direct")(
       Seq(1, 2, 3).toDF("x").write.parquet(s"$wh/direct")) == 3)
     // written elsewhere and moved into place: no write command names the

@@ -98,51 +98,34 @@ class PlanGuardSpec extends SparkSpec {
     // parquet — tier depends on cache state, asserted in neither direction
     "q_x_incr_index_census",
     // same lifecycle for the persisted ANN index (AnnIndex.build trains
-    // the codebook on first reference per (dir, mtime); the admit row has
-    // its own standing-cohort root)
+    // the codebook on first reference per (dir, mtime), and the first
+    // read of each stored codebook version collects it to the driver; the
+    // admit row has its own standing-cohort root)
     "q_x_ann_index_census", "q_x_ann_index_serve", "q_x_ann_index_admit",
     "q_x_ann_index_serve_pq")
 
   test("zero-job census: building any non-exempt registry query runs no Spark job") {
     // the plan-only tier's contract, asserted per query: constructing the
-    // DataFrame (analysis + physical planning) must not submit jobs. The
-    // listener counts job starts; the bus is drained around each build so
-    // attribution can't smear across queries.
-    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        // stage names carry the action call site ("parquet at X.scala:N",
-        // "count at ...", "localCheckpoint at ..."); one entry per job
-        sites.add(js.stageInfos.map(_.name).distinct.mkString(" | "))
-        ()
-      }
+    // DataFrame (analysis + physical planning) must not submit jobs. Job
+    // starts are counted per build; stage names carry the action call site
+    // ("parquet at X.scala:N", "count at ...", "localCheckpoint at ...")
+    val offenders = Seq.newBuilder[String]
+    val lazyExempt = Seq.newBuilder[String]
+    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+      val (_, sites) = jobSites(fn(spark, sfDir).queryExecution.sparkPlan)
+      // parquet footer/schema-inference reads ("parquet at ...") are
+      // metadata jobs every spark.read pays once per table reference —
+      // not query execution; everything else counts
+      val jobs = sites.filterNot(_.startsWith("parquet at"))
+      if (jobs.nonEmpty && !executesAtBuild(name) && !memoizedAtBuild(name))
+        offenders += s"$name (${jobs.length} jobs: ${jobs.distinct.mkString("; ")})"
+      if (jobs.isEmpty && executesAtBuild(name)) lazyExempt += name
     }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      val offenders = Seq.newBuilder[String]
-      val lazyExempt = Seq.newBuilder[String]
-      SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-        org.apache.spark.sql.graft.ListenerBus.drain(sc)
-        sites.clear()
-        fn(spark, sfDir).queryExecution.sparkPlan
-        org.apache.spark.sql.graft.ListenerBus.drain(sc)
-        // parquet footer/schema-inference reads ("parquet at ...") are
-        // metadata jobs every spark.read pays once per table reference —
-        // not query execution; everything else counts
-        val jobs = sites.toArray(Array.empty[String])
-          .filterNot(_.startsWith("parquet at"))
-        if (jobs.nonEmpty && !executesAtBuild(name) && !memoizedAtBuild(name))
-          offenders += s"$name (${jobs.length} jobs: ${jobs.distinct.mkString("; ")})"
-        if (jobs.isEmpty && executesAtBuild(name)) lazyExempt += name
-      }
-      assert(offenders.result().isEmpty,
-        s"plan-only queries ran jobs at build: ${offenders.result().mkString(", ")}")
-      assert(lazyExempt.result().isEmpty,
-        "exempt queries built with zero jobs — remove them from executesAtBuild: " +
-          lazyExempt.result().mkString(", "))
-    } finally sc.removeSparkListener(listener)
+    assert(offenders.result().isEmpty,
+      s"plan-only queries ran jobs at build: ${offenders.result().mkString(", ")}")
+    assert(lazyExempt.result().isEmpty,
+      "exempt queries built with zero jobs — remove them from executesAtBuild: " +
+        lazyExempt.result().mkString(", "))
   }
 
   test("no registered query plans a CartesianProduct or an unbounded-FOLLOWING frame") {

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -96,7 +95,7 @@ class PropertySpec extends SparkSpec {
 
   test("property: idempotent sink converges regardless of replay count") {
     for (replays <- 1 to 3) {
-      val sink = Files.createTempDirectory("graft_prop_sink").toString + "/t"
+      val sink = tempDir("graft_prop_sink").toString + "/t"
       val batch = graft.sources.Tables.events(spark, sfDir).limit(30)
       (0 to replays).foreach { _ =>
         graft.sink.Sinks.appendDedupParquet(batch, sink, Seq("event_id"))
@@ -200,7 +199,7 @@ class PropertySpec extends SparkSpec {
     for (seed <- 1 to 5) {
       val docs = sample(Gen.listOfN(30, docGen), seed.toLong).zipWithIndex
         .map { case (t, i) => (i.toLong, t) }
-      val dir = Files.createTempDirectory(s"graft_vocab_$seed").toString
+      val dir = tempDir(s"graft_vocab_$seed").toString
       docs.toDF("doc_id", "text").write.mode("overwrite").parquet(s"$dir/documents.parquet")
       val got = SparkEntry.queries("q_x_vocab_coverage")(spark, dir)
         .as[(String, Long, Long, Long)].collect().toSet
@@ -226,7 +225,7 @@ class PropertySpec extends SparkSpec {
     for (seed <- 1 to 5) {
       val docs = sample(Gen.listOfN(25, docGen), seed.toLong).zipWithIndex
         .map { case (t, i) => (i.toLong, t) }
-      val dir = Files.createTempDirectory(s"graft_bigram_$seed").toString
+      val dir = tempDir(s"graft_bigram_$seed").toString
       docs.toDF("doc_id", "text").write.mode("overwrite").parquet(s"$dir/documents.parquet")
       val got = SparkEntry.queries("q_x_bigram_fluency")(spark, dir)
         .as[(Long, Int, Double)].collect()

@@ -34,7 +34,7 @@ class PublishSpec extends SparkSpec {
   }
 
   test("two publishers of one stamped root: one live root, never missing, no sibling left") {
-    val base = Files.createTempDirectory("graft_publish_race")
+    val base = tempDir("graft_publish_race")
     val name = new java.io.File(sfDir).getName
     val manifest = base.resolve(name).resolve(Publish.Manifest)
     val source = s"$sfDir/embeddings.parquet"
@@ -68,7 +68,7 @@ class PublishSpec extends SparkSpec {
   }
 
   test("publishOnce replaces an unstamped root and rebuilds one whose stamp differs") {
-    val base = Files.createTempDirectory("graft_publish_stamp")
+    val base = tempDir("graft_publish_stamp")
     val root = base.resolve("sf")
     // a legacy root from before stamps: a manifest and a stale segment
     Files.createDirectories(root.resolve("seg-stale"))
@@ -92,7 +92,7 @@ class PublishSpec extends SparkSpec {
   }
 
   test("republishing a gold table never hides _CURRENT") {
-    val path = Files.createTempDirectory("graft_publish_gold").toString + "/t"
+    val path = tempDir("graft_publish_gold").toString + "/t"
     val missing = missingWhile(Paths.get(path, "_CURRENT")) {
       for (i <- 1 to 20)
         Materialize.goldTable(spark, path, ttlSeconds = 0)(Seq((i, s"v$i")).toDF("id", "tag"))
@@ -104,7 +104,7 @@ class PublishSpec extends SparkSpec {
 
   test("index append and compact never hide _MANIFEST") {
     val docs = graft.sources.Tables.documents(spark, sfDir)
-    val dRoot = Files.createTempDirectory("graft_publish_dedup").toString
+    val dRoot = tempDir("graft_publish_dedup").toString
     DedupIndex.build(spark, dRoot, docs.filter(pmod(col("doc_id"), lit(3)) === 0),
       "doc_id", "text")
     var bands = 0L
@@ -120,7 +120,7 @@ class PublishSpec extends SparkSpec {
     assert(DedupIndex.readBands(spark, dRoot).count() == bands && bands > 0)
 
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    val aRoot = Files.createTempDirectory("graft_publish_ann").toString
+    val aRoot = tempDir("graft_publish_ann").toString
     AnnIndex.build(spark, aRoot, emb.filter(pmod(col("vec_id"), lit(3)) === 0),
       "vec_id", "embedding", nCells = 4, lloydIters = 1)
     val aMissing = missingWhile(Paths.get(aRoot, Publish.Manifest)) {
@@ -136,7 +136,7 @@ class PublishSpec extends SparkSpec {
   }
 
   test("a pointer written with a Hadoop checksum still reads and republishes") {
-    val path = Files.createTempDirectory("graft_publish_crc").toString + "/t"
+    val path = tempDir("graft_publish_crc").toString + "/t"
     Seq((0, "old")).toDF("id", "tag").write.parquet(s"$path/v0-legacy")
     // the earlier writer: the checksumming local file system, which leaves
     // ._CURRENT.crc beside the pointer

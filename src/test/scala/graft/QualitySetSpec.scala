@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.queries.{QualityQueries, WindowSetQueries}
 import graft.sources.Tables
@@ -16,7 +15,7 @@ class QualitySetSpec extends SparkSpec {
   import spark.implicits._
 
   test("dq_report counts seeded violations of every constraint class exactly") {
-    val dir = Files.createTempDirectory("graft_dq").toString
+    val dir = tempDir("graft_dq").toString
     val o = Tables.orders(spark, sfDir)
     val nOrders = o.count()
     val corruptOrders = o

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.serve.Materialize
 
@@ -8,7 +7,7 @@ class ServeSinkSpec extends SparkSpec {
   import spark.implicits._
 
   test("goldTable materializes once within TTL and rebuilds after") {
-    val path = Files.createTempDirectory("graft_gold").toString + "/t"
+    val path = tempDir("graft_gold").toString + "/t"
     var builds = 0
     def build = { builds += 1; Seq((1, "a"), (2, "b")).toDF("id", "v") }
     val first = Materialize.goldTable(spark, path, ttlSeconds = 3600)(build)
@@ -20,7 +19,7 @@ class ServeSinkSpec extends SparkSpec {
   }
 
   test("concurrent stale readers coalesce into one build") {
-    val path = Files.createTempDirectory("graft_gold_race").toString + "/t"
+    val path = tempDir("graft_gold_race").toString + "/t"
     val builds = new java.util.concurrent.atomic.AtomicInteger(0)
     def build = { builds.incrementAndGet(); Seq((1, "a"), (2, "b")).toDF("id", "v") }
     val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
@@ -35,7 +34,7 @@ class ServeSinkSpec extends SparkSpec {
   }
 
   test("reader during rebuild keeps the previous complete snapshot") {
-    val path = Files.createTempDirectory("graft_gold_swap").toString + "/t"
+    val path = tempDir("graft_gold_swap").toString + "/t"
     Materialize.goldTable(spark, path, ttlSeconds = 3600)(Seq((1, "v1")).toDF("id", "tag"))
     val oldReader = Materialize.goldTable(spark, path, ttlSeconds = 3600)(
       fail("fresh snapshot must not rebuild"))
@@ -49,7 +48,7 @@ class ServeSinkSpec extends SparkSpec {
   }
 
   test("proactive refresh fires past the TTL fraction and coalesces") {
-    val path = Files.createTempDirectory("graft_gold_refresh").toString + "/t"
+    val path = tempDir("graft_gold_refresh").toString + "/t"
     val builds = new java.util.concurrent.atomic.AtomicInteger(0)
     def build(tag: String) = { builds.incrementAndGet(); Seq((1, tag)).toDF("id", "tag") }
     Materialize.goldTable(spark, path, ttlSeconds = 3600)(build("v1"))
@@ -67,7 +66,7 @@ class ServeSinkSpec extends SparkSpec {
   }
 
   test("upsertJdbc replaces matching keys and keeps the rest") {
-    val dbDir = Files.createTempDirectory("graft_derby_up").toString
+    val dbDir = tempDir("graft_derby_up").toString
     val url = s"jdbc:derby:$dbDir/db;create=true"
     val props = new java.util.Properties()
     val base = Seq((1L, "a", 10.0), (2L, "b", 20.0), (3L, "c", 30.0)).toDF("id", "name", "v")
@@ -84,7 +83,7 @@ class ServeSinkSpec extends SparkSpec {
   }
 
   test("upsertJdbc merges a multi-partition batch sink-side (no driver collect)") {
-    val dbDir = Files.createTempDirectory("graft_derby_up2").toString
+    val dbDir = tempDir("graft_derby_up2").toString
     val url = s"jdbc:derby:$dbDir/db;create=true"
     val props = new java.util.Properties()
     val base = (1L to 50L).map(i => (i, s"n$i", i.toDouble)).toDF("id", "name", "v")
@@ -104,7 +103,7 @@ class ServeSinkSpec extends SparkSpec {
   }
 
   test("upsertJdbc orderCol makes within-batch duplicate keys last-write-wins") {
-    val dbDir = Files.createTempDirectory("graft_derby_up3").toString
+    val dbDir = tempDir("graft_derby_up3").toString
     val url = s"jdbc:derby:$dbDir/db;create=true"
     val props = new java.util.Properties()
     Seq((1L, "base", 0L)).toDF("id", "name", "seq")
@@ -147,7 +146,7 @@ class ServeSinkSpec extends SparkSpec {
     // a ttl=0 caller republishing in a loop: the retention floor must keep
     // every superseded version on disk (none is older than PruneRetentionMs),
     // so a reader holding any of them never loses its snapshot mid-scan
-    val path = Files.createTempDirectory("graft_gold_floor").toString + "/t"
+    val path = tempDir("graft_gold_floor").toString + "/t"
     for (i <- 1 to 3)
       Materialize.goldTable(spark, path, ttlSeconds = 0)(Seq((i, s"v$i")).toDF("id", "tag"))
     val versionDirs = new java.io.File(path).listFiles()

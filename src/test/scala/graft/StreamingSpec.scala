@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.streaming.StreamJobs
 
@@ -8,7 +7,7 @@ class StreamingSpec extends SparkSpec {
 
   /** Stage the sf0.001 events as a one-file stream source directory. */
   private def stageEvents(): String = {
-    val dir = Files.createTempDirectory("graft_stream_src").toString
+    val dir = tempDir("graft_stream_src").toString
     val batch = graft.sources.Tables.events(spark, sfDir)
     batch.coalesce(1).write.mode("overwrite").parquet(dir)
     dir
@@ -21,7 +20,7 @@ class StreamingSpec extends SparkSpec {
     // scan or through a stream — no watermark, no state store, no
     // reconciliation needed for split stability
     import spark.implicits._
-    val src = Files.createTempDirectory("graft_split_src").toString
+    val src = tempDir("graft_split_src").toString
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select("doc_id")
     docs.coalesce(1).write.mode("overwrite").parquet(src)
@@ -88,7 +87,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming near-dup gate equals the batch cross-corpus operator") {
     import spark.implicits._
-    val src = Files.createTempDirectory("graft_gate_src").toString
+    val src = tempDir("graft_gate_src").toString
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
     val standing = docs.filter(pmod($"doc_id", lit(3)) === 0).select("doc_id", "text")
@@ -111,7 +110,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming mm alignment gate equals the batch cross-corpus alignment") {
     import spark.implicits._
     import graft.operators.{Dedup, Multimodal}
-    val src = Files.createTempDirectory("graft_mmalign_src").toString
+    val src = tempDir("graft_mmalign_src").toString
     val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
     // the q_x_mm_alignment_incr fixture exactly: planted wrong-image cohort
     // (doc_id % 11 == 7 takes the reversed caption's image), % 3 split
@@ -148,12 +147,12 @@ class StreamingSpec extends SparkSpec {
   test("streaming vector admission gate equals the batch index admission") {
     import spark.implicits._
     import graft.serve.AnnIndex
-    val src = Files.createTempDirectory("graft_annadmit_src").toString
+    val src = tempDir("graft_annadmit_src").toString
     val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val standing = emb.filter(pmod($"vec_id", lit(3)) === 0)
     val incoming = emb.filter(pmod($"vec_id", lit(3)) =!= 0)
-    val root = Files.createTempDirectory("graft_annadmit_idx").toString
+    val root = tempDir("graft_annadmit_idx").toString
     AnnIndex.build(spark, root, standing, "vec_id", "embedding", nCells = 8)
     incoming.select($"vec_id", $"embedding").withColumn("ingest_ts", lit(t0))
       .repartition(3).write.mode("append").parquet(src) // several micro-batches
@@ -173,7 +172,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming daily sketches equal the batch sketch columns after drain") {
-    val src = Files.createTempDirectory("graft_sketch_src").toString
+    val src = tempDir("graft_sketch_src").toString
     val ev = graft.sources.Tables.events(spark, sfDir)
     ev.repartition(3).write.mode("overwrite").parquet(src) // 3 micro-batches
     val q = StreamJobs.dailySketches(StreamJobs.fileEventStream(spark, src))
@@ -191,7 +190,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming drift bin counts equal the batch census; chi2 derives identically") {
-    val src = Files.createTempDirectory("graft_drift_src").toString
+    val src = tempDir("graft_drift_src").toString
     val ev = graft.sources.Tables.events(spark, sfDir)
     ev.repartition(3).write.mode("overwrite").parquet(src) // 3 micro-batches
     val q = StreamJobs.driftBinCounts(StreamJobs.fileEventStream(spark, src))
@@ -211,7 +210,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming scd2: closed versions equal the batch history build") {
     // three ts-ordered slices, mtimes forced sequential so the file source
     // replays them in event-time order (the CDC ordered-arrival contract)
-    val src = Files.createTempDirectory("graft_scd2_src").toString
+    val src = tempDir("graft_scd2_src").toString
     val ev = graft.sources.Tables.events(spark, sfDir)
     val n = ev.count()
     val slices = ev.withColumn("rn",
@@ -240,7 +239,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming funnel emits exactly the batch-converted users") {
-    val src = Files.createTempDirectory("graft_funnel_src").toString
+    val src = tempDir("graft_funnel_src").toString
     val ev = graft.sources.Tables.events(spark, sfDir)
     val n = ev.count()
     val slices = ev.withColumn("rn",
@@ -275,7 +274,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming transition steps aggregate to the batch Markov counts") {
-    val src = Files.createTempDirectory("graft_trans_src").toString
+    val src = tempDir("graft_trans_src").toString
     val ev = graft.sources.Tables.events(spark, sfDir)
     val n = ev.count()
     val slices = ev.withColumn("rn",
@@ -299,7 +298,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming drawdown state drains to the batch q_x_drawdown aggregate") {
-    val src = Files.createTempDirectory("graft_dd_src").toString
+    val src = tempDir("graft_dd_src").toString
     val ev = graft.sources.Tables.events(spark, sfDir)
     val n = ev.count()
     val slices = ev.withColumn("rn",
@@ -326,7 +325,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("stream dedup drops replayed event_ids") {
-    val src = Files.createTempDirectory("graft_dup_src").toString
+    val src = tempDir("graft_dup_src").toString
     val ev = graft.sources.Tables.events(spark, sfDir).limit(100)
     // write the same 100 events twice = two micro-batches of pure replay
     ev.coalesce(1).write.mode("append").parquet(src)
@@ -339,7 +338,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming rag chunks: drained stream equals batch chunking row-for-row") {
     import spark.implicits._
-    val src = Files.createTempDirectory("graft_ragchunk_src").toString
+    val src = tempDir("graft_ragchunk_src").toString
     val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
     // 40 tokens → two windows (one overlapping tail), 10 → one short
     // window, blank → none; split across two files to force micro-batches
@@ -366,7 +365,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming embed drift: drained moments equal the batch report") {
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    val src = Files.createTempDirectory("graft_embdrift_src").toString
+    val src = tempDir("graft_embdrift_src").toString
     // two files → two micro-batches; additive sums must merge exactly
     emb.filter(col("vec_id") % 2 === 0).coalesce(1).write.mode("append").parquet(src)
     emb.filter(col("vec_id") % 2 === 1).coalesce(1).write.mode("append").parquet(src)
@@ -386,7 +385,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming contamination gate: rejection feed is exactly the hit pairs") {
     import spark.implicits._
-    val src = Files.createTempDirectory("graft_contam_src").toString
+    val src = tempDir("graft_contam_src").toString
     val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
     val shared = (0 until 8).map(i => s"g$i").mkString(" ") // one full 8-gram
     val bench = Seq(
@@ -416,7 +415,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming corpus prep: quality gate + content dedup across replays") {
     import spark.implicits._
-    val src = Files.createTempDirectory("graft_corpus_src").toString
+    val src = tempDir("graft_corpus_src").toString
     val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
     // base doc (12 distinct tokens incl. one stopword → quality ≈ 0.579),
     // a word-order shuffle of it (same sorted-token fingerprint), a
@@ -494,8 +493,8 @@ class StreamingSpec extends SparkSpec {
 
   test("price poller drains one cycle, normalizes, and re-polls as a no-op") {
     val src = stageEvents()
-    val sink = Files.createTempDirectory("graft_poll_sink").toString + "/prices"
-    val cp = Files.createTempDirectory("graft_poll_cp").toString
+    val sink = tempDir("graft_poll_sink").toString + "/prices"
+    val cp = tempDir("graft_poll_cp").toString
     val q1 = StreamJobs.pricePollerOnce(spark, src, sink, cp)
     q1.awaitTermination() // AvailableNow stops by itself after the drain
     val expected = graft.sources.Tables.events(spark, sfDir)
@@ -514,13 +513,13 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("breaker sink: transient batch failures retry in place, then recover") {
-    val src = Files.createTempDirectory("graft_brk_src").toString
+    val src = tempDir("graft_brk_src").toString
     graft.sources.Tables.events(spark, sfDir).limit(20).coalesce(1)
       .write.mode("append").parquet(src)
-    val sink = Files.createTempDirectory("graft_brk_sink").toString + "/t"
+    val sink = tempDir("graft_brk_sink").toString + "/t"
     val failures = new java.util.concurrent.atomic.AtomicInteger(2)
     val q = StreamJobs.fileEventStream(spark, src).writeStream
-      .option("checkpointLocation", Files.createTempDirectory("graft_brk_cp").toString)
+      .option("checkpointLocation", tempDir("graft_brk_cp").toString)
       .foreachBatch(StreamJobs.breakerForeachBatch(maxAttempts = 3) { (batch, _) =>
         if (failures.getAndDecrement() > 0) sys.error("transient sink outage")
         graft.sink.Sinks.appendDedupParquet(batch.toDF(), sink, Seq("event_id"))
@@ -531,14 +530,14 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("breaker opens after max consecutive failures and the listener latches") {
-    val src = Files.createTempDirectory("graft_brk2_src").toString
+    val src = tempDir("graft_brk2_src").toString
     graft.sources.Tables.events(spark, sfDir).limit(5).coalesce(1)
       .write.mode("append").parquet(src)
     val listener = new StreamJobs.BreakerListener
     spark.streams.addListener(listener)
     try {
       val q = StreamJobs.fileEventStream(spark, src).writeStream
-        .option("checkpointLocation", Files.createTempDirectory("graft_brk2_cp").toString)
+        .option("checkpointLocation", tempDir("graft_brk2_cp").toString)
         .foreachBatch(StreamJobs.breakerForeachBatch(maxAttempts = 2) { (_, _) =>
           sys.error("sink permanently down")
         })
@@ -561,7 +560,7 @@ class StreamingSpec extends SparkSpec {
     // joins — per-row enrichment, so micro-batch slicing cannot show
     // through and the drained stream must equal q_x_pit_features
     // row-for-row
-    val src = Files.createTempDirectory("graft_pit_src").toString
+    val src = tempDir("graft_pit_src").toString
     val ev = graft.sources.Tables.events(spark, sfDir)
     ev.repartition(3).write.mode("overwrite").parquet(src) // 3 micro-batches
     val clickHist = StreamJobs.pitClickHistory(ev).localCheckpoint()
@@ -585,7 +584,7 @@ class StreamingSpec extends SparkSpec {
     // cannot show through (the driftBinCounts argument), so the drained
     // complete-mode table equals the batch moments bit-for-bit — and the
     // LOO encode DERIVED from the drained moments equals q_x_target_encode
-    val src = Files.createTempDirectory("graft_tmom_src").toString
+    val src = tempDir("graft_tmom_src").toString
     val orders = graft.sources.Tables.orders(spark, sfDir)
     orders.repartition(3).write.mode("overwrite").parquet(src)
     val q = StreamJobs.targetMomentsStream(
@@ -619,7 +618,7 @@ class StreamingSpec extends SparkSpec {
     // counters are additive integers: drained state ≡ batch build at any
     // slicing, and the inner-product estimate derived from two drained
     // tables equals the registry row's est_join
-    val src = Files.createTempDirectory("graft_cms_src").toString
+    val src = tempDir("graft_cms_src").toString
     val ev = graft.sources.Tables.events(spark, sfDir)
     ev.repartition(3).write.mode("overwrite").parquet(src)
     def drain(t: String, name: String) = {
@@ -648,7 +647,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming Benford counters drain to the batch census; the deviation report derives identically") {
-    val src = Files.createTempDirectory("graft_benford_src").toString
+    val src = tempDir("graft_benford_src").toString
     val ev = graft.sources.Tables.events(spark, sfDir)
     ev.repartition(3).write.mode("overwrite").parquet(src)
     val q = StreamJobs.benfordCountsStream(
@@ -676,7 +675,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming daily-series upkeep drains to the batch kernel table") {
-    val src = Files.createTempDirectory("graft_daily_src").toString
+    val src = tempDir("graft_daily_src").toString
     val ev = graft.sources.Tables.events(spark, sfDir)
     ev.repartition(3).write.mode("overwrite").parquet(src)
     val q = StreamJobs.dailyCentsStream(
@@ -693,7 +692,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming drift counters drain to the batch state; all three finishers derive the registry rows") {
-    val src = Files.createTempDirectory("graft_drift_src").toString
+    val src = tempDir("graft_drift_src").toString
     val ev = graft.sources.Tables.events(spark, sfDir)
     ev.repartition(3).write.mode("overwrite").parquet(src)
     def drain(mk: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
@@ -730,7 +729,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming scene-change cuts equal the batch rows (stateless append mode)") {
-    val src = Files.createTempDirectory("graft_scene_src").toString
+    val src = tempDir("graft_scene_src").toString
     val docs = graft.sources.Tables.documents(spark, sfDir)
     docs.repartition(3).write.mode("overwrite").parquet(src)
     val q = StreamJobs.sceneChangeStream(
@@ -750,7 +749,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming drift moments + bootstrap state drain to batch; Welch and CI finishers derive the registry rows") {
-    val src = Files.createTempDirectory("graft_welch_src").toString
+    val src = tempDir("graft_welch_src").toString
     val ev = graft.sources.Tables.events(spark, sfDir)
     ev.repartition(3).write.mode("overwrite").parquet(src)
     def drain(mk: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
@@ -780,7 +779,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming CUPED user state + proportion counters drain to batch; finishers derive the registry rows") {
-    val src = Files.createTempDirectory("graft_cuped_src").toString
+    val src = tempDir("graft_cuped_src").toString
     val ev = graft.sources.Tables.events(spark, sfDir)
     ev.repartition(3).write.mode("overwrite").parquet(src)
     def drain(mk: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
@@ -813,7 +812,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming calibration state drains to the batch table; the curve finisher derives the registry row") {
-    val src = Files.createTempDirectory("graft_calib_src").toString
+    val src = tempDir("graft_calib_src").toString
     val docs = graft.sources.Tables.documents(spark, sfDir)
     docs.repartition(3).write.mode("overwrite").parquet(src)
     val q = StreamJobs.calibrationStateStream(
@@ -838,7 +837,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming KMV sketch drains to the batch bottom-k; the estimate derives the registry row") {
-    val src = Files.createTempDirectory("graft_kmv_src").toString
+    val src = tempDir("graft_kmv_src").toString
     val ev = graft.sources.Tables.events(spark, sfDir)
     ev.repartition(3).write.mode("overwrite").parquet(src)
     val q = StreamJobs.kmvStream(
@@ -870,7 +869,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming OHLC candle upkeep drains to the batch bars") {
     // every candle fold is associative (struct extrema / min / max /
     // count / sum), so complete-mode drain ≡ batch at any slicing
-    val src = Files.createTempDirectory("graft_ohlc_src").toString
+    val src = tempDir("graft_ohlc_src").toString
     val ev = graft.sources.Tables.events(spark, sfDir)
     ev.repartition(3).write.mode("overwrite").parquet(src)
     val q = StreamJobs.ohlcStream(
@@ -891,7 +890,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming embed-gram upkeep equals the batch Gram table bit-for-bit") {
     // additive exact-integer second moments over dim pairs: drain ≡ batch
     // regardless of micro-batch slicing
-    val src = Files.createTempDirectory("graft_gram_src").toString
+    val src = tempDir("graft_gram_src").toString
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
       .select("vec_id", "embedding")
     emb.repartition(3).write.mode("overwrite").parquet(src)
@@ -913,7 +912,7 @@ class StreamingSpec extends SparkSpec {
     // additive integer counts: drain ≡ batch regardless of micro-batch
     // slicing, and the rarity score DERIVED from the drained tf equals
     // the batch q_x_rarity_score pipeline row-for-row
-    val src = Files.createTempDirectory("graft_tf_src").toString
+    val src = tempDir("graft_tf_src").toString
     val docs = graft.sources.Tables.documents(spark, sfDir)
       .select("doc_id", "text")
     docs.repartition(3).write.mode("overwrite").parquet(src)
@@ -950,7 +949,7 @@ class StreamingSpec extends SparkSpec {
     // the (entity, category)-keyed streaming state + the broadcast-sized
     // batch finisher must reproduce q_x_er_golden row-for-row regardless
     // of micro-batch slicing (3 batches here)
-    val src = Files.createTempDirectory("graft_gold_src").toString
+    val src = tempDir("graft_gold_src").toString
     val docs = graft.sources.Tables.documents(spark, sfDir)
       .select("doc_id", "text", "lang", "source")
     docs.repartition(3).write.mode("overwrite").parquet(src)
@@ -974,7 +973,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming source-cap sketch drains to the batch top-K; the rank finisher derives the registry row") {
-    val src = Files.createTempDirectory("graft_scap_src").toString
+    val src = tempDir("graft_scap_src").toString
     val docs = graft.sources.Tables.documents(spark, sfDir)
       .select("source", "doc_id", "n_chars")
     docs.repartition(3).write.mode("overwrite").parquet(src)
@@ -999,7 +998,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming temperature-mix state drains to the batch doc totals; the quota finisher derives the registry row") {
-    val src = Files.createTempDirectory("graft_tmix_src").toString
+    val src = tempDir("graft_tmix_src").toString
     val docs = graft.sources.Tables.documents(spark, sfDir)
       .select("source", "doc_id", "n_chars")
     docs.repartition(3).write.mode("overwrite").parquet(src)
@@ -1026,13 +1025,13 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("idempotent sink: replaying a batch adds no rows (parquet + jdbc)") {
-    val sink = Files.createTempDirectory("graft_sink").toString + "/t"
+    val sink = tempDir("graft_sink").toString + "/t"
     val batch = graft.sources.Tables.events(spark, sfDir).limit(50)
     graft.sink.Sinks.appendDedupParquet(batch, sink, Seq("event_id"))
     graft.sink.Sinks.appendDedupParquet(batch, sink, Seq("event_id"))
     assert(spark.read.parquet(sink).count() == 50)
 
-    val dbDir = Files.createTempDirectory("graft_derby").toString
+    val dbDir = tempDir("graft_derby").toString
     val url = s"jdbc:derby:$dbDir/db;create=true"
     val simple = batch.select("event_id", "event_type", "value")
     graft.sink.Sinks.appendDedupJdbc(simple, url, "events_t", Seq("event_id"))

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 import graft.serve.SubscriptionStore
 import graft.serve.SubscriptionStore._
@@ -14,7 +13,7 @@ class SubscriptionSpec extends SparkSpec {
       .toDF("address", "p256dh", "auth", "endpoint", "expiration", "ip", "user_agent", "active")
 
   test("subscription lifecycle: upsert, reads, endpoint and device deactivation") {
-    val empty = load(spark, Files.createTempDirectory("graft_subs").toString + "/none")
+    val empty = load(spark, tempDir("graft_subs").toString + "/none")
     assert(empty.isEmpty && empty.columns.toSeq == schema)
 
     var subs = upsert(upsert(empty, sub("addr1", "authA", "ep1")), sub("addr2", "authB", "ep2"))
@@ -41,7 +40,7 @@ class SubscriptionSpec extends SparkSpec {
   }
 
   test("registry persists through versioned snapshots") {
-    val path = Files.createTempDirectory("graft_subs_p").toString + "/subs"
+    val path = tempDir("graft_subs_p").toString + "/subs"
     val s0 = upsert(load(spark, path), sub("addr1", "authA", "ep1"))
     save(spark, path, s0)
     val reloaded = load(spark, path)

@@ -254,7 +254,7 @@ class TextOpsSpec extends SparkSpec {
     // stand-in corpus dir: run the registry entry against a temp parquet
     // with known token counts (40 → starts 0 and 24; 10 → one short
     // window; blank → none)
-    val dir = java.nio.file.Files.createTempDirectory("ragchunks").toString
+    val dir = tempDir("ragchunks").toString
     val docs = Seq(
       (1L, (0 until 40).map(i => s"t$i").mkString(" "), "en", "s", 40L),
       (2L, (0 until 10).map(i => s"u$i").mkString(" "), "en", "s", 10L),
