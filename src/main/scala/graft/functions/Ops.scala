@@ -276,48 +276,46 @@ object Ops {
     * [[org.apache.spark.sql.Observation]] (a QueryExecutionListener —
     * production's vantage; the r16 probe pinned that observe+checkpoint
     * moves the CollectMetrics to the CHECKPOINT's QueryExecution). The
-    * listener bus is asynchronous, so the reader spin-waits briefly;
-    * `None` after the wait means the metric never fired — AQE's
-    * empty-relation propagation can prune the CollectMetrics subtree when
-    * the frame is empty (the blockingQuality caveat) — and callers fall
-    * back to their pre-fusion check, which only happens on empty/terminal
-    * rounds.
+    * listener bus is asynchronous, so the read spin-waits briefly.
+    *
+    * The metric always has a value: when the observation never fires
+    * within the wait (a stalled listener, or a plan that loses its
+    * CollectMetrics node — the blockingQuality caveat; on Spark 4.1 the
+    * node on top of the frame fired for every empty frame probed), it is
+    * evicted from the session and `metric` is aggregated over the
+    * checkpoint instead, one more job. Aggregates read as they do over the
+    * rows: a count of no rows is 0, a sum of no rows is null.
     *
     * Returns the checkpointed frame (metric column NOT in the output —
-    * observe is pass-through) and a blocking reader.
+    * observe is pass-through) and the metric's value as `T`.
     */
-  def checkpointWithMetric(df: DataFrame, metric: Column): (DataFrame, () => Option[Any]) = {
+  def checkpointWithMetric[T](df: DataFrame, metric: Column): (DataFrame, T) = {
     import org.apache.spark.sql.graft.ObservationBridge.{discard, peek}
     val obs = org.apache.spark.sql.Observation()
     val cp = df.observe(obs, metric).localCheckpoint()
-    val read = () => {
-      // the listener bus usually delivers within well under a millisecond —
-      // spin-yield first (sleep granularity would otherwise add ~2 ms per
-      // round to tight iterative loops), then back off: peek does not
-      // block, so the bound is 1,000 yields + 2,000 one-ms sleeps, ~2 s
-      var tries = 0
-      var m = peek(obs)
-      while (m.isEmpty && tries < 3000) {
-        if (tries < 1000) Thread.`yield`() else Thread.sleep(1)
-        tries += 1; m = peek(obs)
-      }
-      if (m.isEmpty) {
-        // r20: make the fallback LOUD — expected at most once per loop
-        // (AQE's empty-relation propagation pruning the CollectMetrics on
-        // an empty/terminal round); on a NON-empty frame it means the
-        // listener path regressed and every round is paying the ~2 s
-        // wait above. Also evict the never-completing observation
-        // from the session's pending registry (one entry would otherwise
-        // leak per pruned round).
-        val evicted = discard(df.sparkSession, obs)
-        System.err.println(
-          "[graft] checkpointWithMetric: observe metric never fired " +
-            "(CollectMetrics pruned or listener stalled); caller falls " +
-            s"back to a separate action (evicted=$evicted)")
-      }
-      m.values.headOption
+    // the listener bus usually delivers within well under a millisecond —
+    // spin-yield first (sleep granularity would otherwise add ~2 ms per
+    // round to tight iterative loops), then back off: peek does not
+    // block, so the bound is 1,000 yields + 2,000 one-ms sleeps, ~2 s
+    var tries = 0
+    var m = peek(obs)
+    while (m.isEmpty && tries < 3000) {
+      if (tries < 1000) Thread.`yield`() else Thread.sleep(1)
+      tries += 1; m = peek(obs)
     }
-    (cp, read)
+    val value = m.values.headOption.getOrElse {
+      // r20: LOUD — it means the listener path regressed and every round
+      // pays the ~2 s wait above. The never-completing observation would
+      // otherwise stay in the session's pending registry (one leaked entry
+      // per missed metric).
+      val evicted = discard(df.sparkSession, obs)
+      System.err.println(
+        "[graft] checkpointWithMetric: observe metric never fired " +
+          "(CollectMetrics pruned or listener stalled); aggregating it " +
+          s"over the checkpoint (evicted=$evicted)")
+      cp.agg(metric).head.get(0)
+    }
+    (cp, value.asInstanceOf[T])
   }
 
   /** Distributed global LEAD over a DISTINCT numeric key column — the

@@ -671,9 +671,10 @@ object Dedup {
     * any-label-shrank aggregate, no driver-side data). Near-dup graphs are
     * dense blobs with tiny diameters
     * (the LSH star-guard caps them at 2 hops), so 3-4 rounds is typical;
-    * each round is two key-shuffles (join on dst, groupBy node), every
-    * intermediate is localCheckpoint'd to keep the lineage flat, and labels
-    * only ever decrease so the propagation is shuffle-order-independent and
+    * each round is one `Graph.relaxRound`, two key-shuffles (the edge join
+    * on src and the groupBy node), every intermediate is
+    * localCheckpoint'd to keep the lineage flat, and labels only ever
+    * decrease so the propagation is shuffle-order-independent and
     * deterministic. 100 TB lens: O((V+E)·diameter) total shuffle volume; for
     * a pathological long-chain graph the large-star/small-star variant of
     * the same paper halves the diameter per round — the guard rails here
@@ -686,8 +687,7 @@ object Dedup {
     */
   def duplicateClusters(pairs: DataFrame, leftCol: String, rightCol: String,
       idCol: String = "doc_id", maxIter: Int = 50): DataFrame = {
-    val edges = pairs.select(col(leftCol).as("src"), col(rightCol).as("dst"))
-      .unionByName(pairs.select(col(rightCol).as("src"), col(leftCol).as("dst")))
+    val edges = Graph.bothWays(pairs.select(col(leftCol).as("a"), col(rightCol).as("b")))
       .distinct()
       .localCheckpoint()
     var labels = edges.select(col("src").as("node")).distinct()
@@ -696,11 +696,7 @@ object Dedup {
     var iter = 0
     var converged = false
     while (!converged && iter < maxIter) {
-      val neighborLabels = edges
-        .join(labels.withColumnRenamed("node", "dst"), Seq("dst"))
-        .select(col("src").as("node"), col("label"))
-      val merged = neighborLabels.unionByName(labels)
-        .groupBy(col("node")).agg(min(col("label")).as("label"))
+      val merged = Graph.relaxRound(edges, labels, "node", "label")(identity, min)
       // labels are monotonically non-increasing, so "changed" ⟺ "shrank".
       // r19: the shrink census rides the checkpoint job itself — the
       // previous labels join INTO the checkpointed plan (1:1 on the same
@@ -709,19 +705,12 @@ object Dedup {
       // join-and-isEmpty action per round.
       val withPrev = merged
         .join(labels.withColumnRenamed("label", "__prev"), Seq("node"))
-      val (cp, readChanged) = graft.functions.Ops.checkpointWithMetric(
+      val (cp, nChanged) = graft.functions.Ops.checkpointWithMetric[java.lang.Long](
         withPrev.select(col("node"), col("label"), col("__prev")),
         sum(when(col("label") < col("__prev"), 1L).otherwise(0L)).as("n_changed"))
-      val next = cp.select(col("node"), col("label"))
-      converged = readChanged() match {
-        case Some(n: Long) => n == 0L
-        case Some(null) => true // sum over zero rows: no label could change
-        case _ =>
-          // metric pruned (empty frame under AQE) — the pre-fusion check
-          next.join(labels.withColumnRenamed("label", "prev"), Seq("node"))
-            .filter(col("label") < col("prev")).isEmpty
-      }
-      labels = next
+      // a sum over zero rows is null: no label could change
+      converged = nChanged == null || nChanged == 0L
+      labels = cp.select(col("node"), col("label"))
       iter += 1
     }
     if (!converged)

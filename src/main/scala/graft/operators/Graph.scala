@@ -58,7 +58,74 @@ object Graph {
       iters: Int = 3, damping: Double = 0.85,
       exactFold: Boolean = true, checkpointEvery: Int = 0,
       redistributeDanglingMass: Boolean = false,
-      weightCol: Option[String] = None): DataFrame = {
+      weightCol: Option[String] = None): DataFrame =
+    powerIteration(edges, srcCol, dstCol, weightCol, iters, damping, exactFold,
+        checkpointEvery, redistributeDanglingMass) { nodes =>
+      val nDf = nodes.agg(count(lit(1)).as("n"))
+      (nodes.crossJoin(broadcast(nDf)).select(col("node"), (lit(1.0) / col("n")).as("rank")),
+        sums => nodes.join(sums, col("node") === col("dst"), "left").crossJoin(broadcast(nDf)),
+        mass => mass / col("n"))
+    }
+
+  /** Personalized PageRank: the teleport distribution concentrates on a
+    * SEED set instead of all nodes — ranks then measure proximity to the
+    * seeds (the "related entities" / crawl-frontier-prioritization form)
+    * rather than global centrality. Same loop shape and determinism
+    * contract (source-sorted contribution fold) as [[pageRank]]; the
+    * teleport term is `(1−d)/|S|` on seed nodes and 0 elsewhere, attached
+    * as a broadcast-joined flag (the seed set is query-metadata-sized by
+    * definition). Seeds not present in the graph are ignored (they could
+    * never receive or emit mass); the start vector is uniform over the
+    * retained seeds, so on a sink-free graph ranks sum to 1 every round.
+    *
+    * Dangling mass follows the same two tiers as [[pageRank]]: dropped by
+    * default (ranks sum < 1 on graphs with sinks), or — with
+    * `redistributeDanglingMass = true` — returned to the PERSONALIZATION
+    * vector each round (`d·dm·tele(n)`, not uniform: in the personalized
+    * model a surfer stuck on a sink restarts at the seeds, so ranks keep
+    * summing to 1 on ANY graph while staying a proximity measure). The
+    * mass is the same anti-join scalar broadcast as the plain tier.
+    *
+    * `checkpointEvery = k` cuts the rank lineage every k rounds (the
+    * [[pageRank]] knob): ranks are bit-identical with or without it.
+    */
+  def personalizedPageRank(edges: DataFrame, srcCol: String, dstCol: String,
+      seeds: DataFrame, seedCol: String,
+      iters: Int = 3, damping: Double = 0.85,
+      exactFold: Boolean = true, checkpointEvery: Int = 0,
+      redistributeDanglingMass: Boolean = false): DataFrame =
+    powerIteration(edges, srcCol, dstCol, None, iters, damping, exactFold,
+        checkpointEvery, redistributeDanglingMass) { nodes =>
+      val sd = seeds.select(col(seedCol).as("node")).distinct()
+        .join(nodes, Seq("node"), "left_semi")
+        .withColumn("is_seed", lit(true))
+        .localCheckpoint()
+      val nsDf = sd.agg(count(lit(1)).as("ns"))
+      val seeded = nodes.join(broadcast(sd), Seq("node"), "left")
+        .crossJoin(broadcast(nsDf))
+        .select(col("node"),
+          when(col("is_seed"), lit(1.0) / col("ns")).otherwise(lit(0.0)).as("tele"))
+        .localCheckpoint()
+      (seeded.select(col("node"), col("tele").as("rank")),
+        sums => seeded.join(sums, col("node") === col("dst"), "left"),
+        mass => mass * col("tele"))
+    }
+
+  /** The power iteration [[pageRank]] and [[personalizedPageRank]] share.
+    * `teleport(nodes)` gets the graph's node set (src ∪ dst) and returns
+    * the start ranks (node, rank), how each round's contribution sums
+    * (dst, s) join the per-node teleport table (a left join from every
+    * node, so nodes without in-edges keep their teleport share), and how
+    * a mass spreads over the nodes under the teleport distribution. Each
+    * round a node's rank is spread(1−d) + d·s, plus d·spread(dm) with the
+    * dangling mass dm redistributed; the caller's spread fixes the
+    * floating-point operation order (m/n uniform, m·tele personalized).
+    * Runs `iters` rounds as one lazy plan, cut every `checkpointEvery`.
+    */
+  private def powerIteration(edges: DataFrame, srcCol: String, dstCol: String,
+      weightCol: Option[String], iters: Int, damping: Double, exactFold: Boolean,
+      checkpointEvery: Int, redistributeDanglingMass: Boolean)(
+      teleport: DataFrame => (DataFrame, DataFrame => DataFrame, Column => Column)): DataFrame = {
     // materialize the edge list once — the iterations reference it 2·iters
     // times, and without the checkpoint each reference re-executes the
     // caller's whole edge-derivation subtree (measured 4.8 s → 2.6 s at
@@ -91,12 +158,11 @@ object Graph {
     val withDeg = e.join(deg, Seq("src"))
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
-    val nDf = nodes.agg(count(lit(1)).as("n"))
     val share =
       if (weightCol.isDefined) col("rank") * col("w") / col("deg")
       else col("rank") / col("deg")
-    var ranks = nodes.crossJoin(broadcast(nDf))
-      .select(col("node"), (lit(1.0) / col("n")).as("rank"))
+    val (start, withTeleport, spread) = teleport(nodes)
+    var ranks = start
     for (i <- 1 to iters) {
       val contribs = ranks.join(withDeg, col("node") === col("src"))
         .select(col("dst"), col("src"), share.as("c"))
@@ -108,8 +174,7 @@ object Graph {
           graft.functions.Ops.orderedFoldSum(contribs, Seq("dst"), Seq("src"), "c", "s")
         else
           contribs.groupBy(col("dst")).agg(sum(col("c")).as("s"))
-      val base = nodes.join(sums, col("node") === col("dst"), "left")
-        .crossJoin(broadcast(nDf))
+      val base = withTeleport(sums)
       ranks =
         if (redistributeDanglingMass) {
           // total rank sitting on sinks this round: nodes absent from the
@@ -131,97 +196,12 @@ object Graph {
               danglingRanks.agg(coalesce(sum(col("rank")), lit(0.0)).as("dm"))
           base.crossJoin(broadcast(dangling))
             .select(col("node"),
-              (lit(1.0 - damping) / col("n") +
+              (spread(lit(1.0 - damping)) +
                 lit(damping) * (coalesce(col("s"), lit(0.0)) +
-                  col("dm") / col("n"))).as("rank"))
+                  spread(col("dm")))).as("rank"))
         } else
           base.select(col("node"),
-            (lit(1.0 - damping) / col("n") +
-              lit(damping) * coalesce(col("s"), lit(0.0))).as("rank"))
-      if (checkpointEvery > 0 && i % checkpointEvery == 0 && i < iters)
-        ranks = ranks.localCheckpoint()
-    }
-    ranks
-  }
-
-  /** Personalized PageRank: the teleport distribution concentrates on a
-    * SEED set instead of all nodes — ranks then measure proximity to the
-    * seeds (the "related entities" / crawl-frontier-prioritization form)
-    * rather than global centrality. Same loop shape and determinism
-    * contract (source-sorted contribution fold) as [[pageRank]]; the
-    * teleport term is `(1−d)/|S|` on seed nodes and 0 elsewhere, attached
-    * as a broadcast-joined flag (the seed set is query-metadata-sized by
-    * definition). Seeds not present in the graph are ignored (they could
-    * never receive or emit mass); the start vector is uniform over the
-    * retained seeds, so on a sink-free graph ranks sum to 1 every round.
-    *
-    * Dangling mass follows the same two tiers as [[pageRank]]: dropped by
-    * default (ranks sum < 1 on graphs with sinks), or — with
-    * `redistributeDanglingMass = true` — returned to the PERSONALIZATION
-    * vector each round (`d·dm·tele(n)`, not uniform: in the personalized
-    * model a surfer stuck on a sink restarts at the seeds, so ranks keep
-    * summing to 1 on ANY graph while staying a proximity measure). The
-    * mass is the same anti-join scalar broadcast as the plain tier.
-    *
-    * `checkpointEvery = k` cuts the rank lineage every k rounds (the
-    * [[pageRank]] knob): ranks are bit-identical with or without it.
-    */
-  def personalizedPageRank(edges: DataFrame, srcCol: String, dstCol: String,
-      seeds: DataFrame, seedCol: String,
-      iters: Int = 3, damping: Double = 0.85,
-      exactFold: Boolean = true, checkpointEvery: Int = 0,
-      redistributeDanglingMass: Boolean = false): DataFrame = {
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .localCheckpoint()
-    val deg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    val withDeg = e.join(deg, Seq("src"))
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-    val sd = seeds.select(col(seedCol).as("node")).distinct()
-      .join(nodes, Seq("node"), "left_semi")
-      .withColumn("is_seed", lit(true))
-      .localCheckpoint()
-    val nsDf = sd.agg(count(lit(1)).as("ns"))
-    val seeded = nodes.join(broadcast(sd), Seq("node"), "left")
-      .crossJoin(broadcast(nsDf))
-      .select(col("node"),
-        when(col("is_seed"), lit(1.0) / col("ns")).otherwise(lit(0.0)).as("tele"))
-      .localCheckpoint()
-    var ranks = seeded.select(col("node"), col("tele").as("rank"))
-    for (i <- 1 to iters) {
-      val contribs = ranks.join(withDeg, col("node") === col("src"))
-        .select(col("dst"), col("src"), (col("rank") / col("deg")).as("c"))
-      // exact tier: running-window fold (the pageRank rewrite, r19)
-      val sums =
-        if (exactFold)
-          graft.functions.Ops.orderedFoldSum(contribs, Seq("dst"), Seq("src"), "c", "s")
-        else
-          contribs.groupBy(col("dst")).agg(sum(col("c")).as("s"))
-      val base = seeded.join(sums, col("node") === col("dst"), "left")
-      ranks =
-        if (redistributeDanglingMass) {
-          // rank stranded on sinks this round (nodes absent from the
-          // out-degree table). Exact tier: node-sorted fold for the same
-          // bit-exactness argument as the contribution fold; production
-          // tier: plain partial-agg sum (a sorted collect_list over every
-          // sink would buffer node-table scale on one reducer).
-          val danglingRanks = ranks.join(deg, col("node") === col("src"), "left_anti")
-          val dangling =
-            if (exactFold)
-              danglingRanks.agg(coalesce(
-                aggregate(sort_array(collect_list(struct(col("node"), col("rank")))),
-                  lit(0.0), (acc, x) => acc + x.getField("rank")),
-                lit(0.0)).as("dm"))
-            else
-              danglingRanks.agg(coalesce(sum(col("rank")), lit(0.0)).as("dm"))
-          base.crossJoin(broadcast(dangling))
-            .select(col("node"),
-              (lit(1.0 - damping) * col("tele") +
-                lit(damping) * (coalesce(col("s"), lit(0.0)) +
-                  col("dm") * col("tele"))).as("rank"))
-        } else
-          base.select(col("node"),
-            (lit(1.0 - damping) * col("tele") +
+            (spread(lit(1.0 - damping)) +
               lit(damping) * coalesce(col("s"), lit(0.0))).as("rank"))
       if (checkpointEvery > 0 && i % checkpointEvery == 0 && i < iters)
         ranks = ranks.localCheckpoint()
@@ -337,12 +317,61 @@ object Graph {
       .select(col("node"), col("hub"), col("auth"))
   }
 
+  /** Canonical pairs of an undirected edge list: (a, b) = `id` of the
+    * (least, greatest) of each input pair, self-loops dropped, `extra`
+    * columns carried along. Not deduplicated — [[undirected]] is the
+    * distinct set.
+    */
+  private def canonicalPairs(edges: DataFrame, aCol: String, bCol: String,
+      id: Column => Column = identity, extra: Seq[Column] = Nil): DataFrame =
+    edges.select(id(least(col(aCol), col(bCol))).as("a") +:
+        id(greatest(col(aCol), col(bCol))).as("b") +: extra: _*)
+      .filter(col("a") =!= col("b"))
+
+  /** The edge set of an undirected edge list as distinct (a, b) rows with
+    * a < b: duplicates, reversed copies and self-loops in the input do
+    * not change it.
+    */
+  private def undirected(edges: DataFrame, aCol: String, bCol: String,
+      id: Column => Column = identity): DataFrame =
+    canonicalPairs(edges, aCol, bCol, id).distinct()
+
+  /** Both orientations of an (a, b) edge table as (src, dst) rows. */
+  private[operators] def bothWays(e: DataFrame): DataFrame =
+    e.select(col("a").as("src"), col("b").as("dst"))
+      .union(e.select(col("b").as("src"), col("a").as("dst")))
+
+  /** The checkpointed symmetric (src, dst) table of an undirected edge
+    * list: each edge of [[undirected]] once per orientation, so a round
+    * reaches every neighbor of a node through one join on src.
+    */
+  private def symmetricEdges(edges: DataFrame, aCol: String, bCol: String): DataFrame =
+    bothWays(undirected(edges, aCol, bCol)).localCheckpoint()
+
+  /** One relaxation round: every node's value `v` in `state` (key, v)
+    * travels each (src, dst) edge as `step(v)` (one join of the edges to
+    * the state on src), joins the values the nodes already hold (a
+    * union), and each node keeps `agg` over what it then holds (one
+    * key-grouped aggregate). Nodes not in `state` enter it when a value
+    * reaches them. Over a symmetric edge table a node hears from all its
+    * neighbors; an aggregate that ignores input order (min, a sketch
+    * union) makes the round independent of the edge table's orientation
+    * and partitioning. Lazy; returns (key, v).
+    */
+  private[operators] def relaxRound(edges: DataFrame, state: DataFrame, key: String,
+      v: String)(step: Column => Column, agg: Column => Column): DataFrame = {
+    val viaNbr = edges.join(state.withColumnRenamed(key, "src"), "src")
+      .select(col("dst").as(key), step(col(v)).as(v))
+    state.unionByName(viaNbr).groupBy(col(key)).agg(agg(col(v)).as(v))
+  }
+
   /** Approximate k-hop neighborhood sizes — HyperBall (Boldi & Vigna 2013)
     * with theta sketches in place of HyperLogLog counters: each node
     * carries a BOUNDED sketch of its ball, and one hop is "my ball ∪ my
-    * neighbors' balls" — an edge join plus a node-keyed sketch-union
-    * aggregate ([[org.apache.spark.sql.graft.sketches.thetaUnion]]), both
-    * keyed shuffles. Exact distinct k-hop per node materializes Σ·deg^k
+    * neighbors' balls" — one [[relaxRound]]: an edge join plus a
+    * node-keyed sketch-union aggregate
+    * ([[org.apache.spark.sql.graft.sketches.thetaUnion]]), both keyed
+    * shuffles. Exact distinct k-hop per node materializes Σ·deg^k
     * pairs — quadratic on dense graphs — while this is edge-linear per
     * round with O(2^lgK) state per node, the canonical
     * sketch-instead-of-set scale move. Below 2^lgK distinct members a
@@ -355,24 +384,13 @@ object Graph {
   def neighborhoodReach(edges: DataFrame, aCol: String, bCol: String,
       hops: Int, lgK: Int = 12): DataFrame = {
     import org.apache.spark.sql.graft.sketches.{thetaEstimate, thetaSketch, thetaUnion}
-    val e0 = edges
-      .select(least(col(aCol), col(bCol)).as("a"),
-        greatest(col(aCol), col(bCol)).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-    val e = e0.select(col("a").as("src"), col("b").as("dst"))
-      .union(e0.select(col("b").as("src"), col("a").as("dst")))
-      .localCheckpoint()
+    val e = symmetricEdges(edges, aCol, bCol)
     var balls = e.select(col("src").as("node")).distinct()
       .groupBy(col("node")).agg(thetaSketch(col("node"), lgK).as("sk"))
       .localCheckpoint()
-    for (_ <- 1 to hops) {
-      val fromNbr = e.join(balls.withColumnRenamed("node", "dst"), Seq("dst"))
-        .select(col("src").as("node"), col("sk"))
-      balls = balls.unionByName(fromNbr)
-        .groupBy(col("node")).agg(thetaUnion(col("sk"), lgK).as("sk"))
+    for (_ <- 1 to hops)
+      balls = relaxRound(e, balls, "node", "sk")(identity, thetaUnion(_, lgK))
         .localCheckpoint()
-    }
     balls.select(col("node"), thetaEstimate(col("sk")).as("n_reach"))
   }
 
@@ -385,14 +403,15 @@ object Graph {
     * argument), which lets the DuckDB oracle replay the same R rounds as
     * an unrolled CTE chain. Choose rounds ≥ the expected diameter.
     *
-    * Scale shape, per round: two edge-keyed joins (one per direction)
-    * and one node-keyed min aggregate, all keyed shuffles; labels are
-    * localCheckpointed per round (each round references the previous
-    * labels three times — unchecked, the lazy plan re-expands 3^rounds).
-    * Hash-min is the diameter-bound tier; a web-scale high-diameter
-    * graph wants the large-star/small-star alternation (O(log n)
-    * rounds) — implemented as [[connectedComponentsLS]], same per-round
-    * join shape, different re-pointing rule. Input may carry
+    * Scale shape, per round: one [[relaxRound]] — one join of the labels
+    * to the checkpointed symmetric edge table (both orientations, so one
+    * join reaches every neighbor) and one node-keyed min aggregate, both
+    * keyed shuffles; labels are localCheckpointed per round (each round
+    * references the previous labels twice — unchecked, the lazy plan
+    * re-expands 2^rounds). Hash-min is the diameter-bound tier; a
+    * web-scale high-diameter graph wants the large-star/small-star
+    * alternation (O(log n) rounds) — implemented as
+    * [[connectedComponentsLS]], different re-pointing rule. Input may carry
     * duplicates / self-loops / both directions (normalized first).
     *
     * This is the relational-graph sibling of
@@ -402,27 +421,11 @@ object Graph {
     */
   def connectedComponents(edges: DataFrame, aCol: String, bCol: String,
       rounds: Int): DataFrame = {
-    // r19: the checkpointed edge table carries BOTH orientations once, so
-    // each round floods with ONE labels⋈edges join instead of two (the
-    // duplicateClusters shape — same neighbor-label multiset, min is
-    // order-insensitive, labels identical; per-round stage count halves)
-    val e0 = edges
-      .select(least(col(aCol), col(bCol)).as("a"),
-        greatest(col(aCol), col(bCol)).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-    val e = e0.select(col("a").as("src"), col("b").as("dst"))
-      .union(e0.select(col("b").as("src"), col("a").as("dst")))
-      .localCheckpoint()
+    val e = symmetricEdges(edges, aCol, bCol)
     var labels = e.select(col("src").as("n")).distinct()
       .select(col("n"), col("n").as("lab"))
-    for (_ <- 1 to rounds) {
-      val viaNbr = e.join(labels.withColumnRenamed("n", "src"), "src")
-        .select(col("dst").as("n"), col("lab"))
-      labels = labels.unionByName(viaNbr)
-        .groupBy(col("n")).agg(min(col("lab")).as("lab"))
-        .localCheckpoint()
-    }
+    for (_ <- 1 to rounds)
+      labels = relaxRound(e, labels, "n", "lab")(identity, min).localCheckpoint()
     labels.select(col("n").as("node"), col("lab").as("component"))
   }
 
@@ -440,15 +443,12 @@ object Graph {
     * and [[smallStar]]'s closing distinct collapses everything each
     * round, so an extra shuffle per round buys nothing.
     */
-  private def largeStar(e: DataFrame): DataFrame = {
-    val both = e.select(col("a").as("u"), col("b").as("v"))
-      .union(e.select(col("b").as("u"), col("a").as("v")))
-    both
+  private def largeStar(e: DataFrame): DataFrame =
+    bothWays(e)
       .withColumn("m",
-        least(min(col("v")).over(Window.partitionBy(col("u"))), col("u")))
-      .filter(col("v") > col("u"))
-      .select(col("v").as("a"), col("m").as("b"))
-  }
+        least(min(col("dst")).over(Window.partitionBy(col("src"))), col("src")))
+      .filter(col("dst") > col("src"))
+      .select(col("dst").as("a"), col("m").as("b"))
 
   /** One small-star round: every node re-points its SMALLER-OR-EQUAL
     * neighbors (and itself) at the minimum of that set. Operates on the
@@ -497,11 +497,8 @@ object Graph {
     */
   def connectedComponentsLS(edges: DataFrame, aCol: String, bCol: String,
       maxRounds: Int = 50): DataFrame = {
-    var e = edges
-      .select(greatest(col(aCol), col(bCol)).as("a"),
-        least(col(aCol), col(bCol)).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
+    var e = undirected(edges, aCol, bCol)
+      .select(col("b").as("a"), col("a").as("b"))
       .localCheckpoint()
     var eCount = e.count()
     var converged = eCount == 0L
@@ -510,12 +507,8 @@ object Graph {
       // r19: the round's edge count rides the checkpoint job; the EXCEPT
       // (which only fires once counts agree — normally exactly once, at
       // the fixpoint) stays a separate action
-      val (ss, readN) = graft.functions.Ops.checkpointWithMetric(
+      val (ss, ssCount) = graft.functions.Ops.checkpointWithMetric[Long](
         smallStar(largeStar(e)), count(lit(1)).as("n"))
-      val ssCount = readN() match {
-        case Some(n: Long) => n
-        case _ => ss.count()
-      }
       converged = ssCount == eCount && ss.except(e).isEmpty
       e = ss
       eCount = ssCount
@@ -543,38 +536,24 @@ object Graph {
     * a fixpoint is a no-op, so the capped engine loop and the exactly-R
     * oracle replay agree on every node within R hops by construction.
     *
-    * Scale shape, per round: two edge-keyed joins (one per direction) +
-    * one node-keyed min — identical to hash-min component flooding, with
-    * distance+1 in place of label. Per-round localCheckpoint for the same
-    * 3^rounds lineage reason. Seeds not present in the graph are dropped
+    * Scale shape, per round: one [[relaxRound]] over the checkpointed
+    * symmetric edge table (one edge join + one node-keyed min) —
+    * identical to hash-min component flooding, with distance+1 in place
+    * of label. Per-round localCheckpoint for the same 2^rounds lineage
+    * reason. Seeds not present in the graph are dropped
     * (semi-join), matching the isolated-node convention of the other
     * graph operators. Input may carry duplicates / self-loops / both
     * directions (normalized first).
     */
   def bfsDistances(edges: DataFrame, aCol: String, bCol: String,
       seeds: DataFrame, seedCol: String, rounds: Int): DataFrame = {
-    // r19: both orientations materialized once → ONE relax join per round
-    // (the connectedComponents rewrite; distances identical — min over the
-    // same multiset)
-    val e0 = edges
-      .select(least(col(aCol), col(bCol)).as("a"),
-        greatest(col(aCol), col(bCol)).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-    val e = e0.select(col("a").as("src"), col("b").as("dst"))
-      .union(e0.select(col("b").as("src"), col("a").as("dst")))
-      .localCheckpoint()
+    val e = symmetricEdges(edges, aCol, bCol)
     val nodes = e.select(col("src").as("n")).distinct()
     var dist = seeds.select(col(seedCol).as("n")).distinct()
       .join(nodes, Seq("n"), "left_semi")
       .select(col("n"), lit(0L).as("d"))
-    for (_ <- 1 to rounds) {
-      val viaNbr = e.join(dist.withColumnRenamed("n", "src"), "src")
-        .select(col("dst").as("n"), (col("d") + 1L).as("d"))
-      dist = dist.unionByName(viaNbr)
-        .groupBy(col("n")).agg(min(col("d")).as("d"))
-        .localCheckpoint()
-    }
+    for (_ <- 1 to rounds)
+      dist = relaxRound(e, dist, "n", "d")(_ + 1L, min).localCheckpoint()
     dist.select(col("n").as("node"), col("d").as("dist"))
   }
 
@@ -592,26 +571,17 @@ object Graph {
     * converging, so `rounds` is a FIXED count (both sides replay the
     * same R — agreement does not require convergence), not a fixpoint.
     *
-    * Scale shape, per round: two edge-keyed joins emit each node's
-    * neighbor-label votes, one (node, label)-keyed count (map-side
-    * combine absorbs hot labels), one node-keyed argmax via row_number
-    * over (count DESC, label ASC) — all keyed shuffles, edge-linear,
-    * checkpointed per round. The argmax window partitions by node and
+    * Scale shape, per round: one join of the labels to the checkpointed
+    * symmetric edge table emits each node's neighbor-label votes, one
+    * (node, label)-keyed count (map-side combine absorbs hot labels), one
+    * node-keyed argmax via row_number over (count DESC, label ASC) — all
+    * keyed shuffles, edge-linear, checkpointed per round. The argmax window partitions by node and
     * buffers one node's DISTINCT labels — bounded by degree (the
     * in-degree-buffer bound pageRank's exactFold docstring documents).
     */
   def labelPropagation(edges: DataFrame, aCol: String, bCol: String,
       rounds: Int): DataFrame = {
-    // r19: both orientations once → ONE vote join per round (votes are the
-    // same multiset, counts identical)
-    val e0 = edges
-      .select(least(col(aCol), col(bCol)).as("a"),
-        greatest(col(aCol), col(bCol)).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-    val e = e0.select(col("a").as("src"), col("b").as("dst"))
-      .union(e0.select(col("b").as("src"), col("a").as("dst")))
-      .localCheckpoint()
+    val e = symmetricEdges(edges, aCol, bCol)
     var labels = e.select(col("src").as("n")).distinct()
       .select(col("n"), col("n").as("lab"))
     val w = Window.partitionBy(col("n"))
@@ -627,6 +597,23 @@ object Graph {
         .localCheckpoint()
     }
     labels.select(col("n").as("node"), col("lab").as("community"))
+  }
+
+  /** localCheckpoint + STATS reset: the checkpointed LogicalRDD inherits
+    * the original plan's size estimate, and in a doubly-nested iterative
+    * dataflow those estimates MULTIPLY through every join — by Borůvka's
+    * round 4×8 the inherited sizeInBytes is a BigInteger with ~10⁸
+    * digits and the driver burns minutes in Toom-Cook multiplication
+    * inside plan-size estimation (measured: q_x_mst 3m26s → 8s at
+    * sf0.01). Re-wrapping the materialized RDD via createDataFrame
+    * drops the inherited estimate back to the default leaf size, so
+    * estimation cost stays bounded regardless of loop depth. Execution
+    * is unchanged — the data is already materialized; only the
+    * ESTIMATE is reset.
+    */
+  private def checkpointCutStats(df: DataFrame): DataFrame = {
+    val cp = df.localCheckpoint()
+    cp.sparkSession.createDataFrame(cp.rdd, cp.schema)
   }
 
   /** Minimum spanning forest via Borůvka rounds — THE parallel MST (each
@@ -670,55 +657,33 @@ object Graph {
     * remain reachable), so the early exit preserves the fixed-rounds
     * contract while skipping the dead jobs.
     *
-    * Labels and the forest are localCheckpointed per round (three
-    * references each — the 3^rounds lineage argument).
+    * Labels are checkpointed per round (three references each — the
+    * 3^rounds lineage argument); the forest is a lazy union of the
+    * per-round chosen-edge checkpoints.
     *
     * Output: the forest edges (a, b, w).
     */
-  /** localCheckpoint + STATS reset: the checkpointed LogicalRDD inherits
-    * the original plan's size estimate, and in a doubly-nested iterative
-    * dataflow those estimates MULTIPLY through every join — by Borůvka's
-    * round 4×8 the inherited sizeInBytes is a BigInteger with ~10⁸
-    * digits and the driver burns minutes in Toom-Cook multiplication
-    * inside plan-size estimation (measured: q_x_mst 3m26s → 8s at
-    * sf0.01). Re-wrapping the materialized RDD via createDataFrame
-    * drops the inherited estimate back to the default leaf size, so
-    * estimation cost stays bounded regardless of loop depth. Execution
-    * is unchanged — the data is already materialized; only the
-    * ESTIMATE is reset.
-    */
-  private def checkpointCutStats(df: DataFrame): DataFrame = {
-    val cp = df.localCheckpoint()
-    cp.sparkSession.createDataFrame(cp.rdd, cp.schema)
-  }
-
   def boruvkaForest(edges: DataFrame, aCol: String, bCol: String,
       wCol: String, rounds: Int, maxCcRounds: Int = 50): DataFrame = {
-    val e = edges
-      .select(least(col(aCol), col(bCol)).as("a"),
-        greatest(col(aCol), col(bCol)).as("b"),
-        col(wCol).cast("long").as("w"))
-      .filter(col("a") =!= col("b"))
+    val e = canonicalPairs(edges, aCol, bCol, extra = Seq(col(wCol).cast("long").as("w")))
       .groupBy(col("a"), col("b")).agg(min(col("w")).as("w"))
       .localCheckpoint()
     var labels = e.select(col("a").as("n")).union(e.select(col("b").as("n")))
       .distinct()
       .select(col("n"), col("n").as("lab"))
     var forest = e.filter(lit(false)) // empty (a, b, w) frame
-    // converged ⟺ no label moved ⟺ the (monotone-decreasing) label sum is
-    // unchanged; decimal(38,0) keeps the scalar exact at any node count
-    def labelSum(m: DataFrame): java.math.BigDecimal =
-      m.agg(sum(col("mlab").cast("decimal(38,0)")).as("s")).head.getDecimal(0)
     // r19: the per-round/sub-round driver scalars (chosen-edge count, the
     // label-sum convergence scalar) now ride the SAME checkpoint jobs that
     // materialize those tables (Ops.checkpointWithMetric) instead of one
     // extra action each — at sf0.1 this roughly halves the job count of
     // the whole operator, and at 100 TB each avoided action is a cluster
     // round-trip. Stats-cut unchanged (the BigInteger estimate hazard).
-    def cutStatsWithMetric(df: DataFrame, metric: Column): (DataFrame, Option[Any]) = {
-      val (cp, read) = graft.functions.Ops.checkpointWithMetric(df, metric)
-      (cp.sparkSession.createDataFrame(cp.rdd, cp.schema), read())
+    def cutStatsWithMetric[T](df: DataFrame, metric: Column): (DataFrame, T) = {
+      val (cp, v) = graft.functions.Ops.checkpointWithMetric[T](df, metric)
+      (cp.sparkSession.createDataFrame(cp.rdd, cp.schema), v)
     }
+    // converged ⟺ no label moved ⟺ the (monotone-decreasing) label sum is
+    // unchanged; decimal(38,0) keeps the scalar exact at any node count
     val labelSumMetric = sum(col("mlab").cast("decimal(38,0)")).as("s")
     var exhausted = false
     var round = 0
@@ -734,12 +699,8 @@ object Graph {
       val chosen = pick
         .select(col("__m.a").as("a"), col("__m.b").as("b"), col("__m.w").as("w"))
         .distinct()
-      val (chosenCp, nChosen) = cutStatsWithMetric(chosen, count(lit(1)).as("n"))
-      val noneChosen = nChosen match {
-        case Some(n: Long) => n == 0L
-        case _ => chosenCp.isEmpty // metric pruned on the empty round
-      }
-      if (noneChosen) {
+      val (chosenCp, nChosen) = cutStatsWithMetric[Long](chosen, count(lit(1)).as("n"))
+      if (nChosen == 0L) {
         exhausted = true // no component has a cross edge left: done for good
       } else {
         // r20: forest stays a LAZY union — every leaf is an
@@ -753,31 +714,20 @@ object Graph {
         // r19: the component graph materializes BOTH orientations once
         // (it was recomputed from two label joins per sub-round, twice),
         // so each flood is one join over a checkpointed table.
-        val cg0 = chosenCp
+        val cg = checkpointCutStats(bothWays(chosenCp
           .join(labels.select(col("n").as("a"), col("lab").as("__ca")), Seq("a"))
           .join(labels.select(col("n").as("b"), col("lab").as("__cb")), Seq("b"))
-          .select(col("__ca").as("ca"), col("__cb").as("cb"))
-          .distinct()
-        val cg = checkpointCutStats(
-          cg0.select(col("ca").as("src"), col("cb").as("dst"))
-            .union(cg0.select(col("cb").as("src"), col("ca").as("dst"))))
-        val (m0, s0) = cutStatsWithMetric(
+          .select(col("__ca").as("a"), col("__cb").as("b"))
+          .distinct()))
+        var (m, mSum) = cutStatsWithMetric[java.math.BigDecimal](
           cg.select(col("src").as("c")).distinct()
             .select(col("c"), col("c").as("mlab")),
           labelSumMetric)
-        var m = m0
-        var mSum = s0 match {
-          case Some(d: java.math.BigDecimal) => d
-          case _ => labelSum(m)
-        }
         var converged = false
         var cc = 0
         while (!converged && cc < maxCcRounds) {
           cc += 1
-          val viaNbr = cg.join(m.withColumnRenamed("c", "src"), "src")
-            .select(col("dst").as("c"), col("mlab"))
-          val flooded = m.unionByName(viaNbr)
-            .groupBy(col("c")).agg(min(col("mlab")).as("mlab"))
+          val flooded = relaxRound(cg, m, "c", "mlab")(identity, min)
           // pointer jump: label ← label(label); every label value is a cg
           // node (labels start as node ids and only copy), so the lookup
           // always hits — coalesce is belt-and-braces. (r20 negative: a
@@ -790,12 +740,8 @@ object Graph {
             .join(flooded.as("y"), col("x.mlab") === col("y.c"), "left")
             .select(col("x.c").as("c"),
               coalesce(col("y.mlab"), col("x.mlab")).as("mlab"))
-          val (mNext, sOpt) = cutStatsWithMetric(jumped, labelSumMetric)
+          val (mNext, s) = cutStatsWithMetric[java.math.BigDecimal](jumped, labelSumMetric)
           m = mNext
-          val s = sOpt match {
-            case Some(d: java.math.BigDecimal) => d
-            case _ => labelSum(m)
-          }
           converged = s.compareTo(mSum) == 0
           mSum = s
         }
@@ -835,12 +781,7 @@ object Graph {
     */
   def kcore(edges: DataFrame, aCol: String, bCol: String,
       k: Int, rounds: Int): DataFrame = {
-    var e = edges
-      .select(least(col(aCol), col(bCol)).as("a"),
-        greatest(col(aCol), col(bCol)).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-      .localCheckpoint()
+    var e = undirected(edges, aCol, bCol).localCheckpoint()
     var nEdges = e.count()
     var stable = false
     var r = 0
@@ -851,15 +792,11 @@ object Graph {
         .select(col("n"))
       // r19: the survivor count rides the checkpoint job (one observe
       // metric) instead of a separate count action per peel round
-      val (cp, readN) = graft.functions.Ops.checkpointWithMetric(
+      val (cp, n2) = graft.functions.Ops.checkpointWithMetric[Long](
         e.join(keep.withColumnRenamed("n", "a"), Seq("a"), "left_semi")
           .join(keep.withColumnRenamed("n", "b"), Seq("b"), "left_semi"),
         count(lit(1)).as("n"))
       e = cp
-      val n2 = readN() match {
-        case Some(n: Long) => n
-        case _ => e.count() // metric pruned on an empty round — rare
-      }
       stable = n2 == nEdges
       nEdges = n2
       r += 1
@@ -892,12 +829,7 @@ object Graph {
   def ktruss(edges: DataFrame, aCol: String, bCol: String,
       k: Int, rounds: Int): DataFrame = {
     require(k >= 3, "ktruss: k must be at least 3")
-    var e = edges
-      .select(least(col(aCol), col(bCol)).as("a"),
-        greatest(col(aCol), col(bCol)).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-      .localCheckpoint()
+    var e = undirected(edges, aCol, bCol).localCheckpoint()
     def support(es: DataFrame): DataFrame = {
       val tri = es.as("x").join(es.as("y"), col("x.b") === col("y.a"))
         .select(col("x.a").as("ta"), col("x.b").as("tb"), col("y.b").as("tc"))
@@ -912,15 +844,11 @@ object Graph {
     var r = 0
     while (r < rounds && !stable) {
       // r19: survivor count fused into the checkpoint (the kcore move)
-      val (cp, readN) = graft.functions.Ops.checkpointWithMetric(
+      val (cp, n2) = graft.functions.Ops.checkpointWithMetric[Long](
         e.join(support(e).filter(col("support") >= k - 2), Seq("a", "b"),
           "left_semi"),
         count(lit(1)).as("n"))
       e = cp
-      val n2 = readN() match {
-        case Some(n: Long) => n
-        case _ => e.count()
-      }
       stable = n2 == nEdges
       nEdges = n2
       r += 1
@@ -966,12 +894,7 @@ object Graph {
     // most of the runtime, 6.9 s → 6.4 s measured, but only when the
     // replicas line up exchange-for-exchange; the checkpoint makes the
     // single-materialization guarantee structural, as in pageRank)
-    val ce = edges
-      .select(chk(least(col(aCol), col(bCol))).as("a"),
-        chk(greatest(col(aCol), col(bCol))).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-      .localCheckpoint()
+    val ce = undirected(edges, aCol, bCol, chk).localCheckpoint()
     val deg = ce.select(col("a").as("n")).union(ce.select(col("b").as("n")))
       .groupBy(col("n")).agg(count(lit(1)).as("d"))
     // orientation key: (degree, id) packed into one comparable long

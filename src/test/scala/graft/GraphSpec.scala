@@ -646,4 +646,55 @@ class GraphSpec extends SparkSpec {
       .collect().map(r2 => (r2.getLong(0), r2.getLong(1), r2.getLong(2))).toSet
     assert(got == expected)
   }
+
+  test("undirected operators: generated edge lists and noisy copies give the same rows") {
+    // Each undirected operator normalizes its input to the distinct
+    // (least, greatest) pairs without self-loops, so adding duplicates,
+    // reversed copies and self-loops and repartitioning must not change a
+    // single output row. Weights of the added copies are never below the
+    // pair's weight, so the min-weight rule keeps boruvkaForest's input.
+    def weight(a: Long, b: Long): Long = ((a min b) * 7 + (a max b) * 3) % 5 + 1
+    def run(edges: Seq[(Long, Long, Long)]): Map[String, Seq[String]] = {
+      val e = edges.toDF("a", "b", "w").repartition(3)
+      val seeds = edges.flatMap(p => Seq(p._1, p._2)).distinct.sorted.take(2).toDF("s")
+      def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).toSeq.sorted
+      Map(
+        "connectedComponents" -> rows(Graph.connectedComponents(e, "a", "b", rounds = 8)),
+        "connectedComponentsLS" -> rows(Graph.connectedComponentsLS(e, "a", "b")),
+        "bfsDistances" -> rows(Graph.bfsDistances(e, "a", "b", seeds, "s", rounds = 3)),
+        "labelPropagation" -> rows(Graph.labelPropagation(e, "a", "b", rounds = 3)),
+        "kcore" -> rows(Graph.kcore(e, "a", "b", k = 3, rounds = 6)),
+        "ktruss" -> rows(Graph.ktruss(e, "a", "b", k = 3, rounds = 6)),
+        "triangleStats" -> rows(Graph.triangleStats(e, "a", "b")),
+        "boruvkaForest" -> rows(Graph.boruvkaForest(e, "a", "b", "w", rounds = 5)),
+        // lgK 12: balls of ≤ 25 nodes keep the sketch in exact mode
+        "neighborhoodReach" -> rows(Graph.neighborhoodReach(e, "a", "b", hops = 2)))
+    }
+    def noisy(edges: Seq[(Long, Long, Long)], r: scala.util.Random): Seq[(Long, Long, Long)] = {
+      val dups = edges.filter(_ => r.nextBoolean()).map(p => (p._1, p._2, p._3 + r.nextInt(3)))
+      val reversed = edges.filter(_ => r.nextBoolean()).map(p => (p._2, p._1, p._3 + r.nextInt(3)))
+      val loops = (0 until 3).map(_ => r.nextInt(25).toLong).map(n => (n, n, 1L))
+      r.shuffle(edges ++ dups ++ reversed ++ loops)
+    }
+    // the empty list: every operator answers with no rows, except the
+    // triangle census's one row of zero counts (its wedge sum and
+    // clustering coefficient are null over no nodes)
+    val empty = run(Nil)
+    assert(empty == run(noisy(Nil, new scala.util.Random(1))))
+    assert(empty.forall { case (op, got) =>
+      got == (if (op == "triangleStats") Seq("[0,0,null,0,null]") else Nil)
+    }, empty)
+    for (seed <- 1 to 2) {
+      val r = new scala.util.Random(seed)
+      val edges = (1 to 30).map(_ => (r.nextInt(25).toLong, r.nextInt(25).toLong))
+        .filter(p => p._1 != p._2)
+        .map(p => (p._1 min p._2, p._1 max p._2)).distinct
+        .map(p => if (r.nextBoolean()) p else p.swap)
+        .map(p => (p._1, p._2, weight(p._1, p._2)))
+      val clean = run(edges)
+      assert(clean("connectedComponents").nonEmpty && clean("triangleStats").size == 1)
+      val got = run(noisy(edges, r))
+      clean.keys.foreach(op => assert(got(op) == clean(op), s"seed $seed: $op"))
+    }
+  }
 }

@@ -307,7 +307,38 @@ class OpsSpec extends SparkSpec {
     spark.range(10).observe(fired, count(lit(1)).as("n")).collect()
     fired.get // waits for the listener
     assert(peek(fired) == Map("n" -> 10L))
-    val (cp, read) = Ops.checkpointWithMetric(spark.range(7).toDF(), count(lit(1)).as("n"))
-    assert(cp.count() == 7 && read().contains(7L))
+    val (cp, n) = Ops.checkpointWithMetric[Long](spark.range(7).toDF(), count(lit(1)).as("n"))
+    assert(cp.count() == 7 && n == 7L)
+
+    // The fallback: an observation that never fires is evicted and its
+    // metric aggregated over the checkpoint. On Spark 4.1 a CollectMetrics
+    // node on top of the checkpointed frame fired even for empty frames in
+    // every form tried (an empty join side, range(0), lit(false), an empty
+    // local relation, an empty aggregate), so this session drops the
+    // listener that delivers observations, which forces the fallback.
+    val quiet = spark.newSession()
+    def pendingObservations(): Int = {
+      val mgr = quiet.getClass.getMethod("observationManager").invoke(quiet)
+      val f = mgr.getClass.getDeclaredField("observations")
+      f.setAccessible(true)
+      f.get(mgr).asInstanceOf[java.util.Map[_, _]].size
+    }
+    val before = pendingObservations() // builds the manager, which registers its listener
+    quiet.listenerManager.clear()
+    val seven = quiet.range(7).toDF("id")
+    val none = seven.filter(col("id") < 0)
+    val err = new java.io.ByteArrayOutputStream()
+    val stderr = System.err
+    System.setErr(new java.io.PrintStream(err, true))
+    val ((cpN, n0), (_, s0), (_, s7)) =
+      try (Ops.checkpointWithMetric[Long](none, count(lit(1)).as("n")),
+        Ops.checkpointWithMetric[java.lang.Long](none, sum(col("id")).as("s")),
+        Ops.checkpointWithMetric[java.lang.Long](seven, sum(col("id")).as("s")))
+      finally System.setErr(stderr)
+    assert("observe metric never fired".r.findAllMatchIn(err.toString).size == 3,
+      "every call must take the fallback")
+    // a count of no rows is 0, a sum of no rows null, a sum of rows their sum
+    assert(n0 == 0L && s0 == null && s7 == 21L && cpN.isEmpty)
+    assert(pendingObservations() == before, "an observation that never fired must be evicted")
   }
 }
