@@ -30,8 +30,9 @@ import graft.sink.Sinks
   * is routine, the reference's at-least-once load (ls_opening.rs:100):
   *
   *  - Bronze appends only keys it does not hold yet, in one fused pass over
-  *    all five families ([[Sinks.appendDedupParquet]]'s split form), and
-  *    the `entities` marker logs the rows this run landed.
+  *    all five families ([[Sinks.appendDedupParquet]]'s split form, whose
+  *    key check reads every family's held `event_id`s in one file scan),
+  *    and the `entities` marker logs the rows this run landed.
   *  - Silver and gold are overwritten from this run's source, and only when
   *    stale: the table is missing, or it has no marker finished after the
   *    last `entities` marker that logged rows (this run's included). Under
@@ -39,7 +40,9 @@ import graft.sink.Sinks
   *    to a fresh table, so a re-delivered source costs two Spark queries:
   *    the `run_log` read and the key check. A skipped stage still logs its
   *    marker, with `rows = 0`; markers are written on the driver, without a
-  *    Spark job ([[RunLog]]).
+  *    Spark job ([[RunLog]]). A derived plan (the as-of enrichment, the
+  *    rollups) is built only when a stage that writes it runs, so a skipped
+  *    stage costs no analysis either.
   *    Logs written before markers counted landed rows hold table totals
   *    (always > 0); the job then refreshed every stage after each of them,
   *    so the rule reads them correctly.
@@ -96,8 +99,9 @@ object IngestJob {
     }
 
     // silver: enriched purchases (as-of price, in_stable precompute — R4:
-    // enrich at write time so every read query skips the as-of join)
-    val enriched = EventPipeline.enrichPurchases(parsed)
+    // enrich at write time so every read query skips the as-of join);
+    // lazy, so a run that skips both stages using it never analyzes its plan
+    lazy val enriched = EventPipeline.enrichPurchases(parsed)
     refresh("enriched_purchases") {
       enriched.withColumn("event_date", to_date(col("ts")))
         .write.mode(SaveMode.Overwrite).partitionBy("event_date").parquet(_)

@@ -16,11 +16,14 @@ object Sinks {
     * holds, append the remainder. Exactly the reference's at-least-once +
     * keyed-dedup = effectively-once contract (ls_opening.rs:100), shaped for
     * `foreachBatch` reuse. Re-delivering the same batch appends no rows.
-    * The sink's keys are read with their types in `batch` ([[heldKeys]]).
+    * NULL is a key like any other: the dedup keeps one row for it and the
+    * anti-join matches it null-safely, so a NULL key lands once.
+    * The sink's keys are read with their types in `batch` ([[heldKeys]]);
+    * they may be partition columns of the table.
     */
   def appendDedupParquet(batch: DataFrame, path: String, keys: Seq[String],
       partitionCols: Seq[String] = Seq.empty): Unit = {
-    val held = if (exists(batch.sparkSession, path)) Seq(heldKeys(batch, path, keys)) else Nil
+    val held = Option.when(exists(batch.sparkSession, path))(heldKeys(batch, path, keys))
     appendParquet(unseen(batch, keys, held), path, partitionCols)
   }
 
@@ -28,10 +31,13 @@ object Sinks {
     * `splitCol` routes each row to the table `<root>/<value>`, for the values
     * in `tables` (rows with any other value are dropped; the column itself
     * is not written). One dedup on `(splitCol, keys)` and ONE anti-join
-    * against the union of every existing table's keys replace a pass per
-    * table. The new rows are materialized once, counted per table in one
-    * aggregate, and appended only to the tables that gained rows, so a
-    * re-delivered batch costs its key check and writes nothing.
+    * against the keys every existing table holds replace a pass per table.
+    * Those keys are read in one file scan over all the tables
+    * ([[heldKeysByTable]]), so no key may be a partition column, and each
+    * table name must be one directory level. NULL keys land once, as in
+    * the single-table form. The new rows are materialized once, counted per
+    * table in one aggregate, and appended only to the tables that gained
+    * rows, so a re-delivered batch costs its key check and writes nothing.
     *
     * Returns the rows this call landed per table (0 where none landed) —
     * counted before the write, so a caller logs what it appended, not a
@@ -40,8 +46,11 @@ object Sinks {
   def appendDedupParquet(batch: DataFrame, root: String, splitCol: String,
       tables: Seq[String], keys: Seq[String],
       partitionCols: Seq[String]): Map[String, Long] = {
-    val held = tables.filter(t => exists(batch.sparkSession, s"$root/$t")).map(t =>
-      heldKeys(batch, s"$root/$t", keys).select(lit(t).as(splitCol) +: keys.map(col): _*))
+    require(!keys.exists(partitionCols.contains) && !tables.exists(_.contains('/')),
+      s"keys $keys must not be partition columns $partitionCols; tables $tables must not nest")
+    val present = tables.filter(t => exists(batch.sparkSession, s"$root/$t"))
+    val held = Option.when(present.nonEmpty)(
+      heldKeysByTable(batch, root, present, splitCol, keys, partitionCols.size))
     val fresh = unseen(batch.filter(col(splitCol).isin(tables: _*)), splitCol +: keys, held)
       .persist()
     try {
@@ -66,10 +75,42 @@ object Sinks {
     batch.sparkSession.read.schema(StructType(keys.map(batch.schema(_)))).parquet(path)
       .select(keys.map(col): _*)
 
-  /** `batch` deduplicated on `keys`, minus every key already in `held`. */
-  private def unseen(batch: DataFrame, keys: Seq[String], held: Seq[DataFrame]): DataFrame = {
+  /** `(splitCol, keys)` of every row held by the tables `<root>/<t>`, read
+    * in one recursive file scan with the key types of `batch`. A row's table
+    * is the directory above the `partitionDepth` partition directories that
+    * hold its file, named as Spark reports it in `_metadata.file_path`:
+    * URL-encoded, so it is looked up by each table's encoded name rather
+    * than decoded (a decode would read `+` as a space). The root is never
+    * matched as a prefix of the path. A file whose directory at that depth
+    * names no table (a table written with other partition columns, a stray
+    * subdirectory) fails the read: its keys would otherwise match nothing
+    * and land again. The recursive read infers no partition columns, and it
+    * skips `_`- and `.`-prefixed files and directories (`_temporary`,
+    * unpublished files) as a plain read does.
+    */
+  private def heldKeysByTable(batch: DataFrame, root: String, tables: Seq[String],
+      splitCol: String, keys: Seq[String], partitionDepth: Int): DataFrame = {
+    val paths = tables.map(t => s"$root/$t")
+    val byEncodedName = typedLit(paths.map(p =>
+      new org.apache.hadoop.fs.Path(p).toUri.getRawPath.split('/').last).zip(tables).toMap)
+    val dir = element_at(split(col("_metadata.file_path"), "/"), -(partitionDepth + 2))
+    batch.sparkSession.read.schema(StructType(keys.map(batch.schema(_))))
+      .option("recursiveFileLookup", "true").parquet(paths: _*)
+      .select(coalesce(element_at(byEncodedName, dir), raise_error(concat(
+        lit("unexpected file under split root: "), col("_metadata.file_path"))))
+        .as(splitCol) +: keys.map(col): _*)
+  }
+
+  /** `batch` deduplicated on `keys`, minus every key already in `held`
+    * (whose columns are `keys`, in order). Keys match null-safely, as the
+    * dedup groups them: a NULL key already held is not appended again.
+    */
+  private def unseen(batch: DataFrame, keys: Seq[String], held: Option[DataFrame]): DataFrame = {
     val fresh = batch.dropDuplicates(keys)
-    if (held.isEmpty) fresh else fresh.join(held.reduce(_ union _), keys, "left_anti")
+    held.fold(fresh) { held =>
+      val h = held.toDF(keys.map("__held_" + _): _*)
+      fresh.join(h, keys.map(k => fresh(k) <=> h("__held_" + k)).reduce(_ && _), "left_anti")
+    }
   }
 
   private def appendParquet(df: DataFrame, path: String, partitionCols: Seq[String]): Unit = {
@@ -81,20 +122,17 @@ object Sinks {
   /** Idempotent JDBC append: stage the batch minus already-present keys, then
     * bulk-append (reference K1/K2/K3; `batchsize` plays push_values). The
     * anti-join reads only the key columns from the sink — pushdown keeps it a
-    * key scan, not a full-table read.
+    * key scan, not a full-table read — and matches NULL keys null-safely,
+    * so a NULL key lands once.
     */
   def appendDedupJdbc(batch: DataFrame, url: String, table: String,
       keys: Seq[String], props: Properties = new Properties()): Unit = {
-    val spark = batch.sparkSession
-    val fresh = batch.dropDuplicates(keys)
     // Only a confirmed-absent table may skip the anti-join: a transient read
     // failure must propagate, or a replayed batch would double-append and
     // break the effectively-once contract.
-    val toWrite =
-      if (jdbcTableExists(url, table, props))
-        fresh.join(spark.read.jdbc(url, table, props).select(keys.map(col): _*), keys, "left_anti")
-      else fresh
-    toWrite.write.mode(SaveMode.Append).jdbc(url, table, props)
+    val held = Option.when(jdbcTableExists(url, table, props))(
+      batch.sparkSession.read.jdbc(url, table, props).select(keys.map(col): _*))
+    unseen(batch, keys, held).write.mode(SaveMode.Append).jdbc(url, table, props)
   }
 
   /** SCD-1 dimension refresh: full overwrite of a small registry table

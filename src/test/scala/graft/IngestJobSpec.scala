@@ -2,7 +2,11 @@ package graft
 
 import java.nio.file.Files
 import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import graft.ingest.IngestJob
 import graft.sources.Tables
 
@@ -131,14 +135,38 @@ class IngestJobSpec extends SparkSpec {
     dir
   }
 
+  /** File scans over tables under `dir` that `plan` holds, counting those in
+    * the plans of the cached relations it reads. An adaptive plan is read
+    * as planned: once a stage comes out empty, its final plan keeps no scan.
+    */
+  private def scansUnder(plan: SparkPlan, dir: String): Int = plan match {
+    case a: AdaptiveSparkPlanExec => scansUnder(a.inputPlan, dir)
+    case m: InMemoryTableScanExec => scansUnder(m.relation.cachedPlan, dir)
+    case s: FileSourceScanExec => if (s.relation.location.rootPaths.exists(_.toString.contains(dir))) 1 else 0
+    case p => p.children.map(scansUnder(_, dir)).sum
+  }
+
   test("no-op replay keeps silver and gold files as they are and logs 0 landed rows") {
     val wh = tempDir("graft_wh").toString
     IngestJob.run(spark, sfDir, wh)
     val before = derived.map(t => t -> listing(s"$wh/$t")).toMap
     val bronze = listing(s"$wh/entities")
-    val (_, sites) = jobSites(IngestJob.run(spark, sfDir, wh))
+    // per execution of the replay, its file scans over the entity tables
+    val census = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+        census.add(scansUnder(qe.executedPlan, s"$wh/entities")); ()
+      }
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val (_, sites) =
+      try jobSites(IngestJob.run(spark, sfDir, wh))
+      finally spark.listenerManager.unregister(listener)
     assert(!sites.exists(_.contains("parquet at Tables.scala")),
       s"a replay inferred the source's schema: ${sites.mkString("; ")}")
+    assert(census.asScala.filter(_ > 0).toSeq == Seq(1),
+      s"the key check reads every family's keys in one scan: ${census.asScala.mkString(", ")}")
     derived.foreach(t => assert(listing(s"$wh/$t") == before(t), s"$t was rewritten"))
     assert(listing(s"$wh/entities") == bronze, "bronze changed on replay")
     assert(lastRows(wh) == (derived :+ "entities").map(_ -> 0L).toMap,
